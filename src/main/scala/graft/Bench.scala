@@ -43,17 +43,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1").toInt.max(0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated query filter for micro-benchmarking
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * CLI entry for the EXstream explanation pipeline — the engine's analogue
  * of running `python script_1.py` (`/root/reference/script_1.py:263-328`):
@@ -17,14 +15,7 @@ object ExplainMain {
     val labelFilename = if (args.length > 1) args(1) else "labels"
     val maxDistance = if (args.length > 2) args(2).toDouble else 40.0
     val outDir = if (args.length > 3) Some(args(3)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-explain")
     spark.sparkContext.setLogLevel("WARN")
 
     for {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.Ckpt._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.Sources
@@ -18,12 +18,22 @@ import graft.sources.Sources
  * is executor-side and embarrassingly parallel across (window x feature);
  * the only driver-side data are the k x k correlation matrix and the final
  * explanation rows.
+ *
+ * Steps 1-3 (correlation dedup -> FP filter -> reward + leap cutoff) are
+ * composed once, in `explainByRs`: [[explanatoryFeatures]] runs it on the
+ * full data alone, [[constructExplanations]] on the full data plus every
+ * instability resample in one plan.
  */
 object ExstreamPipeline {
 
   /**
    * The core explanation query (§3.2): given labeled observations, return
-   * per window the ranked-and-filtered explanatory feature list.
+   * per window the ranked-and-filtered explanatory feature list — the
+   * single-instance run of [[explainByRs]].
+   *
+   * Re-keying is the whole group-level variant (SURVEY §3.3): the notebook
+   * computes rewards per ANOMALY TYPE (`testing.ipynb` cells 21-26), which
+   * is this query over `obs.withColumn("window_key", col("ano_type"))`.
    *
    * @param obs          long observation table (IntervalLabeler output)
    * @param featureOrder original feature column order (ranking tie-break)
@@ -32,48 +42,71 @@ object ExstreamPipeline {
   def explanatoryFeatures(
       obs: DataFrame,
       featureOrder: Seq[String],
-      cfg: ExstreamConfig): DataFrame = {
-    val spark = obs.sparkSession
+      cfg: ExstreamConfig): DataFrame =
+    explainByRs(obs.withColumn("rs", lit(-1)), featureOrder, cfg, Seq(-1))
+      .select("window_key", "features")
 
-    // step 1: correlation-cluster feature dedup (global, driver-side graph)
-    val selected: Seq[String] =
-      if (cfg.cluster) {
-        val wide = pivotWide(obs, featureOrder)
-        CorrelationFilter.selectFeatures(wide, featureOrder, cfg.correlationThreshold, cluster = true)
-      } else featureOrder
-    val selectedSet = selected.toSet
-    val obsSel = obs.where(col("feature").isin(selected: _*))
+  /** The resample id folded into a window key: `"<rs>#<key>"`, so every
+    * pipeline instance rides the same per-window shuffles. */
+  private[graft] def rsKey(key: Column): Column = concat_ws("#", col("rs"), key)
 
-    // step 2: false-positive filtering (per window)
+  /** Inverse of [[rsKey]] on a frame's `window_key`: splits off `rs` (int)
+    * at the first `#` and restores the original key. */
+  private[graft] def unfoldRs(df: DataFrame): DataFrame = {
+    val parts = split(col("window_key"), "#", 2)
+    df.withColumn("rs", parts.getItem(0).cast("int"))
+      .withColumn("window_key", parts.getItem(1))
+  }
+
+  /**
+   * Steps 1-3 of the explanation query — correlation dedup, FP filter,
+   * entropy reward + leap cutoff — for every resample instance at once.
+   * The resample id is folded into the window key ([[rsKey]]), so all
+   * instances ride the SAME shuffles instead of one plan execution each.
+   *
+   * @param obs      observation table carrying an int `rs` column
+   * @param rsValues every `rs` value `obs` may hold (-1 = full data)
+   * @return `(rs, window_key, features: array<string>)`
+   */
+  private def explainByRs(
+      obs: DataFrame,
+      featureOrder: Seq[String],
+      cfg: ExstreamConfig,
+      rsValues: Seq[Int]): DataFrame = {
+    val folded = obs.withColumn("window_key", rsKey(col("window_key")))
+
+    // step 1, per rs: correlation-cluster feature dedup — the reference
+    // re-runs get_explanatory_features (clustering included) on each
+    // resample (`script_1.py:213-222`), so feature selection is per-rs;
+    // all moment rows come from ONE aggregation pass.
+    val obsSel =
+      if (cfg.cluster && featureOrder.size > 1) {
+        val wide = folded.groupBy("rs", "window_key", "timestamp", "type_data")
+          .pivot("feature", featureOrder).agg(first("value"))
+        val selByRs = CorrelationFilter.selectFeaturesBy(
+          wide, featureOrder, cfg.correlationThreshold, "rs")
+        val keep = rsValues.map { r =>
+          col("rs") === r && col("feature").isin(selByRs.getOrElse(r, featureOrder): _*)
+        }.reduce(_ || _)
+        folded.where(keep)
+      } else folded
+
+    // step 2, per rs: FP filter; series align on rs so a resampled window
+    // only matches against its own resample's reference series
     val featIdx = featureOrder.zipWithIndex.toMap
     val obsFiltered =
       if (cfg.falsePositiveFiltering) {
         val kept = FalsePositiveFilter.matchCounts(
-          obsSel, featIdx, cfg.maxDistance, cfg.matchCountKeep, cfg.patternFromRefWindow)
+          obsSel, featIdx, cfg.maxDistance, cfg.matchCountKeep,
+          cfg.patternFromRefWindow, seriesAlignKeys = Seq("rs"))
         FalsePositiveFilter.filterObservations(obsSel, kept)
       } else obsSel
 
-    // step 3: entropy reward + leap cutoff
+    // step 3: rewards + leap cutoff, all instances through one shuffle
     val rewards = EntropyReward.rewards(obsFiltered, cfg.applyWorstCase)
       .withColumn("feat_idx", EntropyReward.featIdxCol(featIdx, col("feature")))
-    LeapFilter.explanations(rewards)
+    unfoldRs(LeapFilter.explanations(rewards)).select("rs", "window_key", "features")
   }
-
-  /**
-   * Group-level variant of the explanation query (SURVEY §3.3): the
-   * notebook computes rewards per ANOMALY TYPE (all windows of a type
-   * pooled) instead of per window (`testing.ipynb` cells 21-26). Any
-   * grouping column works — the reward/leap operators only see
-   * `window_key`, so re-keying the observation table is the whole
-   * mechanism.
-   */
-  def explanatoryFeaturesBy(
-      obs: DataFrame,
-      featureOrder: Seq[String],
-      cfg: ExstreamConfig,
-      groupKeyCol: String): DataFrame =
-    explanatoryFeatures(
-      obs.withColumn("window_key", col(groupKeyCol)), featureOrder, cfg)
 
   /** 16-bit md5-prefix cutoff for a given sample fraction: a 32-hex-char
     * md5 compares lexicographically below the 4-hex-char cutoff iff its
@@ -90,7 +123,8 @@ object ExstreamPipeline {
   }
 
   /** Pivot the long observation table back to wide (one row per
-    * (window, timestamp, type_data)) — needed only by the correlation step. */
+    * (window, timestamp, type_data)) — the input of
+    * `FeatureImportance.randomForestImportances`. */
   def pivotWide(obs: DataFrame, featureOrder: Seq[String]): DataFrame =
     obs.groupBy("window_key", "timestamp", "type_data")
       .pivot("feature", featureOrder)
@@ -116,10 +150,10 @@ object ExstreamPipeline {
 
     // instability: the explanation query re-run on N 80% resamples
     // (`script_1.py:227-241`). The resample id `rs` (-1 = full data,
-    // 0..N-1 = samples) is folded into the window key, so ALL N+1 pipeline
-    // instances ride the SAME shuffles — correlation moments, FP
-    // patterns/series, rewards, leap — instead of N+1 serial plan
-    // executions (~(N+1)x the shuffled bytes, zero extra stages; q38's
+    // 0..N-1 = samples) is folded into the window key by `explainByRs`,
+    // so ALL N+1 pipeline instances ride the SAME shuffles — correlation
+    // moments, FP patterns/series, rewards, leap — instead of N+1 serial
+    // plan executions (~(N+1)x the shuffled bytes, zero extra stages; q38's
     // proven shape). Sampling is a deterministic md5 hash of the WIDE-row
     // key — the reference samples whole wide rows, i.e. every feature of a
     // (window, class, timestamp) jointly (`script_1.py:228-230`) — kept
@@ -142,41 +176,8 @@ object ExstreamPipeline {
     val obs = obs0.ckptLazy
       .withColumn("rs", explode(array(rsValues.map(lit(_)): _*)))
       .where(col("rs") === -1 || sampled)
-      .withColumn("window_key", concat_ws("#", col("rs"), col("window_key")))
-
-    // step 1, per rs: correlation-cluster feature dedup — the reference
-    // re-runs get_explanatory_features (clustering included) on each
-    // resample (`script_1.py:213-222`), so feature selection is per-rs;
-    // all N+1 moment rows come from ONE aggregation pass.
-    val obsSel =
-      if (cfg.cluster && featureOrder.size > 1) {
-        val wide = obs.groupBy("rs", "window_key", "timestamp", "type_data")
-          .pivot("feature", featureOrder).agg(first("value"))
-        val selByRs = CorrelationFilter.selectFeaturesBy(
-          wide, featureOrder, cfg.correlationThreshold, "rs")
-        val keep = rsValues.map { r =>
-          col("rs") === r && col("feature").isin(selByRs.getOrElse(r, featureOrder): _*)
-        }.reduce(_ || _)
-        obs.where(keep)
-      } else obs
-
-    // step 2, per rs: FP filter; series align on rs so a resampled window
-    // only matches against its own resample's reference series
+    val expl = explainByRs(obs, featureOrder, cfg, rsValues)
     val featIdx = featureOrder.zipWithIndex.toMap
-    val obsFiltered =
-      if (cfg.falsePositiveFiltering) {
-        val kept = FalsePositiveFilter.matchCounts(
-          obsSel, featIdx, cfg.maxDistance, cfg.matchCountKeep,
-          cfg.patternFromRefWindow, seriesAlignKeys = Seq("rs"))
-        FalsePositiveFilter.filterObservations(obsSel, kept)
-      } else obsSel
-
-    // step 3: rewards + leap cutoff, all instances through one shuffle
-    val rewards = EntropyReward.rewards(obsFiltered, cfg.applyWorstCase)
-      .withColumn("feat_idx", EntropyReward.featIdxCol(featIdx, col("feature")))
-    val expl = LeapFilter.explanations(rewards)
-      .withColumn("rs", split(col("window_key"), "#", 2).getItem(0).cast("int"))
-      .withColumn("window_key", split(col("window_key"), "#", 2).getItem(1))
 
     val main = expl.where(col("rs") === -1).select("window_key", "features")
     val resamples = expl.where(col("rs") >= 0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.plans.{FloatVecOps, LongSetOps, MinHashSignature, SegEntropyAgg}
@@ -36,4 +36,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
         builder))
     }
+}
+
+object GraftExtensions {
+
+  /** The per-object `register(spark)` helpers' one body: registers `name`
+    * only when the session lacks it (injected by [[GraftExtensions]] or
+    * registered by an earlier call), the idempotent-setup pattern —
+    * replacing a registered function logs a WARN on every query call. */
+  private[graft] def registerOnce(
+      spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
 }

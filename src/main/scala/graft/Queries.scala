@@ -7875,7 +7875,7 @@ object Queries {
     // ---- the pooled (type-level) grouping variant (SURVEY §3.3): the
     // notebook computes one explanation per anomaly TYPE, all windows of
     // the type pooled. Re-keying the observation table IS the mechanism
-    // (explanatoryFeaturesBy) — here pooled into 8 user cohorts ----
+    // (window_key := the group column) — here pooled into 8 user cohorts ----
     "q41_exstream_by_group" -> ((s, d) => exstreamExplainByGroup(s, d)),
 
     // ---- worst-case shuffle (T2): quantized values force cross-class
@@ -8018,11 +8018,10 @@ object Queries {
       .where(col("rs") === -1 ||
         md5(concat_ws("_", col("user_id"), col("us"), col("rs")).cast("binary")) < "cc")
       .select(
-        concat_ws("#", col("rs"), col("user_id")).as("window_key"),
+        ExstreamPipeline.rsKey(col("user_id")).as("window_key"),
         col("feature"), col("value"), col("type_data"))
-    val kept = LeapFilter.keptFeatures(eventRewards(obs))
-      .withColumn("rs", split(col("window_key"), "#").getItem(0).cast("int"))
-      .withColumn("user_id", split(col("window_key"), "#").getItem(1).cast("long"))
+    val kept = ExstreamPipeline.unfoldRs(LeapFilter.keptFeatures(eventRewards(obs)))
+      .withColumn("user_id", col("window_key").cast("long"))
 
     val main = kept.where(col("rs") === -1)
       .groupBy("user_id")

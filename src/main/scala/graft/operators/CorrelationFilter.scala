@@ -129,29 +129,14 @@ object CorrelationFilter {
   }
 
   /**
-   * @param wide      one row per observation, feature columns present
-   * @param featureOrder feature columns in original (insertion) order
-   * @return selected feature names, in original column order
-   */
-  def selectFeatures(
-      wide: DataFrame,
-      featureOrder: Seq[String],
-      correlationThreshold: Double,
-      cluster: Boolean): Seq[String] = {
-    if (!cluster || featureOrder.size <= 1) return featureOrder
-    val (pairs, aggs) = momentAggs(featureOrder)
-    val row = wide.agg(aggs.head, aggs.tail: _*).head()
-    selectFromMomentRow(row, 0, pairs, featureOrder, correlationThreshold)
-  }
-
-  /**
-   * Grouped variant: one moment row PER group value (e.g. one per
-   * instability resample), all from a single aggregation pass — the
-   * fused-pipeline replacement for calling [[selectFeatures]] once per
+   * One moment row PER group value (e.g. one per instability resample),
+   * all from a single aggregation pass — rather than one aggregation per
    * resample, each re-executing the upstream pivot shuffle. The group
    * count is tiny (1 + resample rounds), so the collected result is a
    * handful of rows regardless of data volume.
    *
+   * @param wide     one row per observation, feature columns present
+   * @param featureOrder feature columns in original (insertion) order
    * @param groupCol integer grouping column present in `wide`
    * @return group value -> selected feature names, in original column order
    */

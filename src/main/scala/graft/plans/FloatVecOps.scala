@@ -48,8 +48,7 @@ object FloatVecOps {
     FloatArrayDot(exprs.head, exprs(1))
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
+    graft.GraftExtensions.registerOnce(spark, FunctionName, builder)
 
   /** Column API: dot product of two array<float> columns (by name). */
   def floatDot(spark: SparkSession, a: String, b: String): Column = {

@@ -91,8 +91,7 @@ object LongSetOps {
     LongArrayIntersectSize(exprs.head, exprs(1))
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
+    graft.GraftExtensions.registerOnce(spark, FunctionName, builder)
 
   /** Column API: intersection size of two array<bigint> columns. The
     * columns must resolve by name in the calling plan. */

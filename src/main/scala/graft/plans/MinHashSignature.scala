@@ -95,8 +95,7 @@ object MinHashSignature {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
+    graft.GraftExtensions.registerOnce(spark, FunctionName, builder)
 
   /** Column API; `hashesCol` must resolve by name in the calling plan. */
   def minhashSignature(spark: SparkSession, hashesCol: String, k: Int): Column = {

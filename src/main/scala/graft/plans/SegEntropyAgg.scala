@@ -76,8 +76,7 @@ object SegEntropyAgg {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, builder, "scala_udf")
+    graft.GraftExtensions.registerOnce(spark, FunctionName, builder)
 
   /** Column API: aggregate over (valueCol, classCol) resolved by name. */
   def segEntropy(spark: SparkSession, valueCol: String, classCol: String,

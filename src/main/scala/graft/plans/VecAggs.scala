@@ -46,8 +46,7 @@ object VecAggs {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      OuterProductFunctionName, builder, "scala_udf")
+    graft.GraftExtensions.registerOnce(spark, OuterProductFunctionName, builder)
 
   /** Column API: Σ vec·vecᵀ (flattened row-major) for `array<bigint>`
     * column `vecCol`, resolved by name. */
@@ -65,8 +64,7 @@ object VecAggs {
   }
 
   def registerBucketSums(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BucketSumsFunctionName, bucketSumsBuilder, "scala_udf")
+    graft.GraftExtensions.registerOnce(spark, BucketSumsFunctionName, bucketSumsBuilder)
 
   /** Column API: elementwise Σ of `array<bigint>` column `vecCol` over
     * ALL rows concatenated with the Σ over rows where boolean `flagCol`

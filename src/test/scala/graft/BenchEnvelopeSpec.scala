@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * failure is believed. The 3x margin (vs Bench's 2x "noisy" flag)
  * absorbs the spec environment's looser control (shared suite JVM,
  * whatever master the first suite pinned); a genuine 3x runtime
- * regression on a warm re-run is a code problem, not weather.
+ * regression on a warm re-run is a code problem, not weather. Both
+ * gates read ONE sweep: each query's untimed warm pass is also its
+ * shuffle-bytes read-off.
  *
  * The completeness assertion is the maintenance contract: a new query
  * without an envelope entry fails the build until the envelope is
@@ -44,28 +46,13 @@ class BenchEnvelopeSpec extends AnyFunSuite {
     sec
   }
 
-  test("every query has a committed envelope entry (maintenance contract)") {
-    val env = BenchEnvelope.load().getOrElse(sfKey, Map.empty)
-    val missing = SparkEntry.queries.keySet -- env.keySet
-    assert(missing.isEmpty,
-      s"queries without a $sfKey envelope entry (regenerate via scripts/make_envelope.py): " +
-        missing.toSeq.sorted.mkString(", "))
-  }
+  private lazy val timeEnv = BenchEnvelope.load().getOrElse(sfKey, Map.empty)
+  private lazy val bytesEnv = BenchEnvelope.load().getOrElse(sfKey + "_bytes", Map.empty)
 
-  test("every query has a committed shuffle-bytes envelope entry (plan-drift contract)") {
-    val env = BenchEnvelope.load().getOrElse(sfKey + "_bytes", Map.empty)
-    val missing = SparkEntry.queries.keySet -- env.keySet
-    assert(missing.isEmpty,
-      s"queries without a ${sfKey}_bytes envelope entry (regenerate via scripts/make_envelope.py): " +
-        missing.toSeq.sorted.mkString(", "))
-  }
-
-  test("no query's shuffle bytes exceed 1.25x + 1MiB of the committed envelope at sf0.01") {
-    // the r9 verdict's remaining blind spot: a plan regression under a
-    // QUIET host (lost broadcast, extra exchange) hides inside the time
-    // margin. Shuffle bytes are a property of the executed plan — one
-    // pass, no warmup or min-of-runs needed; the margin absorbs AQE
-    // coalesce/compression jitter only.
+  /** Shuffle bytes written by one full run of `name`. Shuffle bytes are a
+    * property of the executed plan — one pass, no warmup or min-of-runs
+    * needed. */
+  private def shuffleBytes(name: String): Long = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -74,18 +61,49 @@ class BenchEnvelopeSpec extends AnyFunSuite {
       case q: QueryStageExec => q +: collectPlans(q.plan)
       case other => other +: (other.children ++ other.subqueries).flatMap(collectPlans)
     }
-    val env = BenchEnvelope.load().getOrElse(sfKey + "_bytes", Map.empty)
-    assert(env.nonEmpty, s"BENCH_ENVELOPE.json must carry an ${sfKey}_bytes section")
-    val breaches = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      env.get(name).flatMap { limit =>
-        val df = fn(spark, sf)
-        // materialize through the df's OWN execution so its plan metrics
-        // populate (a noop write runs a separate execution — Bench note)
-        df.queryExecution.toRdd.foreach(_ => ())
-        val got = collectPlans(df.queryExecution.executedPlan)
-          .collect { case e: ShuffleExchangeLike => e }
-          .map(e => e.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(0L)).sum
-        spark.catalog.clearCache()
+    val df = SparkEntry.queries(name)(spark, sf)
+    // materialize through the df's OWN execution so its plan metrics
+    // populate (a noop write runs a separate execution — Bench note)
+    df.queryExecution.toRdd.foreach(_ => ())
+    val got = collectPlans(df.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeLike => e }
+      .map(e => e.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(0L)).sum
+    spark.catalog.clearCache()
+    got
+  }
+
+  /** The one sweep both gates read: per query, the untimed warm pass
+    * (JIT + codegen + page cache) doubles as the shuffle-bytes read-off,
+    * then one timed pass. `(name, bytes, seconds)`, in name order. */
+  private lazy val sweep: Seq[(String, Long, Double)] =
+    SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => timeEnv.contains(n) || bytesEnv.contains(n))
+      .map { name =>
+        val bytes = shuffleBytes(name)
+        (name, bytes, timeOnce(name))
+      }
+
+  test("every query has a committed envelope entry (maintenance contract)") {
+    val missing = SparkEntry.queries.keySet -- timeEnv.keySet
+    assert(missing.isEmpty,
+      s"queries without a $sfKey envelope entry (regenerate via scripts/make_envelope.py): " +
+        missing.toSeq.sorted.mkString(", "))
+  }
+
+  test("every query has a committed shuffle-bytes envelope entry (plan-drift contract)") {
+    val missing = SparkEntry.queries.keySet -- bytesEnv.keySet
+    assert(missing.isEmpty,
+      s"queries without a ${sfKey}_bytes envelope entry (regenerate via scripts/make_envelope.py): " +
+        missing.toSeq.sorted.mkString(", "))
+  }
+
+  test("no query's shuffle bytes exceed 1.25x + 1MiB of the committed envelope at sf0.01") {
+    // the r9 verdict's remaining blind spot: a plan regression under a
+    // QUIET host (lost broadcast, extra exchange) hides inside the time
+    // margin. The margin absorbs AQE coalesce/compression jitter only.
+    assert(bytesEnv.nonEmpty, s"BENCH_ENVELOPE.json must carry an ${sfKey}_bytes section")
+    val breaches = sweep.flatMap { case (name, got, _) =>
+      bytesEnv.get(name).flatMap { limit =>
         if (got > limit * 1.25 + (1L << 20))
           Some(f"$name: $got%d bytes > 1.25x envelope ${limit.toLong}%d")
         else None
@@ -106,13 +124,9 @@ class BenchEnvelopeSpec extends AnyFunSuite {
     // broad enough to move the median itself is exactly what the
     // driver's per-round 2x-gate sweep and the shuffle-bytes plan gate
     // above are for.
-    val env = BenchEnvelope.load().getOrElse(sfKey, Map.empty)
+    val env = timeEnv
     assert(env.nonEmpty, "BENCH_ENVELOPE.json must carry an sf0.01 section")
-    val names = SparkEntry.queries.keys.toSeq.sorted.filter(env.contains)
-    val firstPass = names.map { name =>
-      timeOnce(name) // warm: JIT + codegen + page cache, untimed
-      name -> timeOnce(name)
-    }
+    val firstPass = sweep.collect { case (name, _, sec) if env.contains(name) => name -> sec }
     val ratios = firstPass.map { case (n, s) => s / env(n) }.sorted
     val rawMedianRatio = math.max(1.0, ratios(ratios.size / 2))
     // r13 ADVICE: an uncapped median normalization would also silence a

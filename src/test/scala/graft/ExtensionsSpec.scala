@@ -78,6 +78,18 @@ class ExtensionsSpec extends AnyFunSuite {
           assert(spark.sessionState.functionRegistry
             .functionExists(FunctionIdentifier(name)), s"$name not installed")
         }
+
+      // the operators' register(spark) calls leave an installed function
+      // alone: after two EntropyReward.rewards runs, graft_seg_entropy is
+      // still the entry GraftExtensions injected, not a replacement
+      import spark.implicits._
+      val obs = Seq(("w", "f", 1.0, 0), ("w", "f", 2.0, 1))
+        .toDF("window_key", "feature", "value", "type_data")
+      (1 to 2).foreach(_ => graft.operators.EntropyReward.rewards(obs).collect())
+      val info = spark.sessionState.functionRegistry
+        .lookupFunction(FunctionIdentifier(graft.plans.SegEntropyAgg.FunctionName))
+      assert(info.map(_.getClassName).contains(classOf[GraftExtensions].getName),
+        s"graft_seg_entropy was re-registered: ${info.map(_.getClassName)}")
     } finally {
       spark.stop()
       SparkSession.clearActiveSession()

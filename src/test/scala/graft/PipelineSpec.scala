@@ -120,9 +120,10 @@ class PipelineSpec extends AnyFunSuite {
 
   test("type-level grouping variant pools windows per anomaly type (SURVEY §3.3)") {
     val (obs, featureOrder, _) = loaded
-    import spark.implicits._
-    val byType = ExstreamPipeline.explanatoryFeaturesBy(
-      obs, featureOrder, ExstreamConfig(applyWorstCase = true), groupKeyCol = "ano_type")
+    import org.apache.spark.sql.functions.col
+    val byType = ExstreamPipeline.explanatoryFeatures(
+      obs.withColumn("window_key", col("ano_type")), featureOrder,
+      ExstreamConfig(applyWorstCase = true))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     assert(byType.keySet == Set("bursty input", "stalled input"))
     byType.values.foreach(f => assert(f.contains("f_sep")))
@@ -143,43 +144,46 @@ class PipelineSpec extends AnyFunSuite {
 
   test("fused construct matches per-resample explanatoryFeatures run separately " +
       "(full config: clustering + FP filtering)") {
-    import spark.implicits._
+    // every (cluster, fp) config, the full one included
     import org.apache.spark.sql.functions.{col, concat_ws, lit, md5}
-    val cfg = ExstreamConfig(cluster = true, falsePositiveFiltering = true,
-      maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
-    val fused = ExstreamPipeline.constructExplanations(spark, fixtureDir, "labels", cfg)
-      .orderBy("trace_id", "ano_id").collect()
-
-    // replicate each pipeline instance the SLOW way: apply the fused
-    // path's exact md5 sampling predicate per rs, then run the original
-    // single-instance explanatoryFeatures on that slice
     val (obs, featureOrder, labels) = loaded
-    def sliceFor(rs: Int) =
-      if (rs == -1) obs
-      else obs.where(
-        md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
-          col("timestamp"), lit(rs)).cast("binary")) <
-          ExstreamPipeline.sampleCutoffHex(cfg.sampleFraction))
-    val perRs: Map[Int, Map[String, Seq[String]]] = (-1 until cfg.instabilityRounds).map { rs =>
-      rs -> ExstreamPipeline.explanatoryFeatures(sliceFor(rs), featureOrder, cfg)
-        .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    }.toMap
-
     val keyOf = labels.collect().map { r =>
       val (tid, aid) = (r.getAs[String]("trace_id"), r.getAs[Long]("ano_id"))
       (tid, aid) -> s"${Sources.anomalyTypeForTrace(tid)}_${tid}_${r.getAs[Long]("label_row")}"
     }.toMap
     val featIdx = featureOrder.zipWithIndex.toMap
-    fused.foreach { row =>
-      val wk = keyOf((row.getString(0), row.getLong(1)))
-      val wantMain = perRs(-1)(wk).map(featIdx)
-      assert(row.getSeq[Int](2) == wantMain, s"$wk main: ${row.getSeq[Int](2)} vs $wantMain")
-      val wantInst = graft.functions.EntropyCore.instabilityEntropy(
-        (0 until cfg.instabilityRounds).flatMap(rs => perRs(rs).get(wk)))
-      assert(math.abs(row.getDouble(4) - wantInst) < 1e-12,
-        s"$wk instability: ${row.getDouble(4)} vs $wantInst")
+    for (cluster <- Seq(false, true); fp <- Seq(false, true)) {
+      val cfg = ExstreamConfig(cluster = cluster, falsePositiveFiltering = fp,
+        maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
+      val fused = ExstreamPipeline.constructExplanations(spark, fixtureDir, "labels", cfg)
+        .orderBy("trace_id", "ano_id").collect()
+
+      // replicate each pipeline instance the SLOW way: apply the fused
+      // path's exact md5 sampling predicate per rs, then run the
+      // single-instance explanatoryFeatures on that slice
+      def sliceFor(rs: Int) =
+        if (rs == -1) obs
+        else obs.where(
+          md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
+            col("timestamp"), lit(rs)).cast("binary")) <
+            ExstreamPipeline.sampleCutoffHex(cfg.sampleFraction))
+      val perRs: Map[Int, Map[String, Seq[String]]] = (-1 until cfg.instabilityRounds).map { rs =>
+        rs -> ExstreamPipeline.explanatoryFeatures(sliceFor(rs), featureOrder, cfg)
+          .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+      }.toMap
+
+      val tag = s"cluster=$cluster fp=$fp"
+      fused.foreach { row =>
+        val wk = keyOf((row.getString(0), row.getLong(1)))
+        val wantMain = perRs(-1)(wk).map(featIdx)
+        assert(row.getSeq[Int](2) == wantMain, s"$tag $wk main: ${row.getSeq[Int](2)} vs $wantMain")
+        val wantInst = graft.functions.EntropyCore.instabilityEntropy(
+          (0 until cfg.instabilityRounds).flatMap(rs => perRs(rs).get(wk)))
+        assert(math.abs(row.getDouble(4) - wantInst) < 1e-12,
+          s"$tag $wk instability: ${row.getDouble(4)} vs $wantInst")
+      }
+      assert(fused.length == 4, tag)
     }
-    assert(fused.length == 4)
   }
 
   test("sampleFraction is honored by the fused resampler (16-bit md5 cutoff)") {
