@@ -5,8 +5,8 @@ schema) at the folder_1 data scale — 6 traces x 45,000 rows x 12 float64
 metric columns, 29 labeled windows (the gen_folder1.py window layout).
 PipelineF2Spec proves the 12-column path at fixture scale; this fixture
 is for the at-scale parity + wall-clock row in BASELINE.md
-(ref_driver.py with E2E_DATA=/tmp/folder1scale_f2 vs OursE2E with the
-same path).
+(ref_driver.py with E2E_DATA=/tmp/folder1scale_f2 vs the engine's
+`constructExplanations` on the same path).
 
 Behavioral roles mirror gen_f2_fixture.py: a separating feature, a
 quantized feature, a constant, a correlated twin, noise/ramp/seasonal

@@ -446,8 +446,8 @@ object Queries {
     // divisions; chunk identity is md5-60 (collisions ~n^2/2^61,
     // identical in the shared-hash oracle).
     "q115_cdc_chunk_dedup" -> ((s, d) => {
-      // oracle pins mod = 16 = StreamingOps.cdcModulusFor() at its
-      // defaults (the sized value for typical web-document shape)
+      // oracle pins mod = 16: a ~512-token web document split into
+      // ~32 chunks (the rolling-hash modulus IS the expected chunk length)
       val w = 3; val mod = 16
       val chUdf = udf((text: String) =>
         graft.functions.ShingleKernel.cdcChunkHashes(text, w, mod))
@@ -5134,10 +5134,9 @@ object Queries {
           (col("l1m").cast("double") / lit(1000000.0)).as("lang_l1_selection"))
     }),
 
-    // CONTAMINATION FIRST-SEEN ATTRIBUTION (the batch third of the q227/
-    // crossSourceContamIngest triangle — per SOURCE, how much content
-    // did it originate vs re-ingest, and from whom): per content hash
-    // the first arrival is min doc_id (the
+    // CONTAMINATION FIRST-SEEN ATTRIBUTION (the batch side of q227 —
+    // per SOURCE, how much content did it originate vs re-ingest, and
+    // from whom): per content hash the first arrival is min doc_id (the
     // replay's seq — min_by/arg_min, unique ids make the tie moot);
     // every later arrival classifies as same-source repeat or cross-
     // source contamination. One partial-aggregated groupBy per hash +
@@ -6342,10 +6341,10 @@ object Queries {
     // jaccard >= 0.5 against a BASE doc), or novel. The near side
     // filters the shared full-corpus pair graph to cross (new, base)
     // pairs so the oracle reuses the q26 CTE verbatim; the
-    // production-scale form bands ONLY the delta against the base
-    // bucket registry (StreamingOps.nearDupCandidatesIngest — the same
-    // kernels, spec-tested), which is linear in the delta, not the
-    // corpus. Exact side is two hash projections and a semi-join.
+    // production-scale form bands ONLY the delta against a base bucket
+    // registry built by the same LSH kernels, which is linear in the
+    // delta, not the corpus. Exact side is two hash projections and a
+    // semi-join.
     "q104_delta_dedup" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val isNew = md5(col("doc_id").cast("string").cast("binary")) < "1a"

@@ -154,9 +154,9 @@ object Dedup {
    *              semantics q26 oracles.
    */
   /** (doc, hset, sig): one md5-32 hash per distinct shingle plus the
-    * k-permutation minhash signature — the shared front end of the LSH
-    * pair join and the streaming ingest flagger. One string hash per
-    * shingle, then k cheap integer permutations over the deduped hash
+    * k-permutation minhash signature — the front end of the LSH pair
+    * join. One string hash per shingle, then k cheap integer
+    * permutations over the deduped hash
     * set (the min is unaffected by duplicates, and the same sorted hash
     * set drives exact verification downstream). The shingle hash is the
     * 32-bit md5 prefix (PortableHash convention, computed in the fused
@@ -166,29 +166,22 @@ object Dedup {
     * AFTER the signature projection is load-bearing twice over: it fans
     * the hashing work out of a single file split, and the exchange
     * materializes `sig` so CollapseProject cannot inline the
-    * 64-expression signature into each band hash. (Streaming callers
-    * skip the repartition — a stream is already micro-batched and a
-    * repartition would force an exchange per batch.) */
+    * 64-expression signature into each band hash. */
   private[graft] def shingleSignatures(
       docs: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleN: Int, repartitionForBatch: Boolean = true,
-      extraCols: Seq[String] = Nil): DataFrame = {
+      k: Int, shingleN: Int): DataFrame = {
     val hsetUdf = udf((text: String) =>
       graft.functions.ShingleKernel.md5ShingleSet(text, shingleN))
-    val base = docs.select(
-      col(idCol).as("doc") +: extraCols.map(col) :+
-        hsetUdf(col(textCol)).as("hset"): _*)
+    docs.select(col(idCol).as("doc"), hsetUdf(col(textCol)).as("hset"))
       .where(size(col("hset")) > 0)
       // single-pass custom expression (graft.plans.MinHashSignature): the
       // composable array_min(transform(...))*k form allocates boxed
       // intermediates and was the measured bottleneck of this operator
       .withColumn("sig",
         graft.plans.MinHashSignature.minhashSignature(docs.sparkSession, "hset", k))
-    // explicit partition count: AQE may coalesce a column-only
-    // repartition of byte-light data back onto one core
-    if (repartitionForBatch)
-      base.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc"))
-    else base
+      // explicit partition count: AQE may coalesce a column-only
+      // repartition of byte-light data back onto one core
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc"))
   }
 
   /** Band hash per (doc, band): xxhash64 over the band's signature
@@ -196,15 +189,13 @@ object Dedup {
     * shuffles — the (fat) hash sets are joined back onto survivors
     * afterwards, so the heavy payload crosses the wire once per doc,
     * not once per bucket collision. */
-  private[graft] def bandHashes(sig: DataFrame, k: Int, bands: Int,
-                                extraCols: Seq[String] = Nil): DataFrame = {
+  private[graft] def bandHashes(sig: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val rows = k / bands
-    sig.select(
-      col("doc") +: extraCols.map(col) :+
-        posexplode(array((0 until bands).map { b =>
-          xxhash64((b * rows until (b + 1) * rows).map(i => element_at(col("sig"), i + 1)): _*)
-        }: _*)).as(Seq("band", "band_hash")): _*)
+    sig.select(col("doc"),
+      posexplode(array((0 until bands).map { b =>
+        xxhash64((b * rows until (b + 1) * rows).map(i => element_at(col("sig"), i + 1)): _*)
+      }: _*)).as(Seq("band", "band_hash")))
   }
 
   def minhashLshPairs(
@@ -320,7 +311,10 @@ object Dedup {
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
     if (!longKeys || maxDriverEdges <= 0L)
       return dupClustersWithRounds(pairs, aCol, bCol)._1
-    val uniq = fwd.distinct()
+    // a pair with a null endpoint is no edge: dropped here, so the driver
+    // union-find (which reads primitive longs) and the above-gate
+    // distributed loop see the same edge set
+    val uniq = fwd.where(col("a").isNotNull && col("b").isNotNull).distinct()
       .ckptLazy // consumers: gate count + (driver collect | distributed rounds)
     val m = uniq.count() // materializes the checkpoint
     if (m > maxDriverEdges)
@@ -654,45 +648,5 @@ object Dedup {
     val keptOwners = firstOcc.join(broadcast(del), Seq("doc_id"), "left_anti")
       .select("h", "doc_id")
     (newClusters, keptOwners.unionByName(reattributed.select("h", "doc_id")))
-  }
-
-  /** The full dedup registry a deletion batch folds into: clusters +
-    * the edge/posting evidence future deletions will need. All four
-    * tables are plain DataFrames; [[rtbfStep]] returns a new state whose
-    * members ride lazy localCheckpoints (the r5 multi-consumer rule —
-    * each member is consumed by the NEXT step's joins and by readers). */
-  final case class RtbfState(
-      clusters: DataFrame, // (doc_id, cluster_id), singletons self-clustered
-      pairs: DataFrame, // (doc_a, doc_b) surviving verified pairs
-      postings: DataFrame, // (h, doc_id) surviving shingle postings
-      firstOcc: DataFrame) // (h, doc_id) current owners
-
-  /**
-   * One deletion batch folded into the registry — [[rtbfApply]] plus the
-   * evidence-table maintenance that makes steps COMPOSE: the next batch
-   * must see pairs/postings already shed of this batch's docs, or its
-   * re-clustering would resurrect deleted edges. Folding batches one at
-   * a time equals one [[rtbfApply]] of the union (StreamingSpec replays
-   * a 3-batch stream and proves set-equality; the streaming twin is
-   * [[graft.streaming.StreamingOps.rtbfIngest]]).
-   *
-   * Scale shape: everything deletion-sized broadcasts ([[rtbfApply]]'s
-   * contract); the evidence anti-joins are narrow broadcast anti-joins
-   * over the surviving tables. RtbfScaleSpec measures that the step's
-   * shuffle bytes track the DELETION, not the corpus.
-   */
-  def rtbfStep(st: RtbfState, deleted: DataFrame): RtbfState = {
-    val del = deleted.select("doc_id").distinct()
-      .ckptLazy // consumers: apply + 3 evidence anti-joins
-    val (nc, nf) = rtbfApply(st.clusters, st.pairs, st.postings, st.firstOcc, del)
-    val np = st.pairs
-      .join(broadcast(del.select(col("doc_id").as("doc_a"))), Seq("doc_a"), "left_anti")
-      .join(broadcast(del.select(col("doc_id").as("doc_b"))), Seq("doc_b"), "left_anti")
-    val npost = st.postings.join(broadcast(del), Seq("doc_id"), "left_anti")
-    RtbfState(
-      nc.ckptLazy,
-      np.ckptLazy,
-      npost.ckptLazy,
-      nf.ckptLazy)
   }
 }

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /**
- * Ingestion (SURVEY.md §2.1, S1-S4): trace CSVs + label CSV -> DataFrames,
- * and the driver testdata parquet tables.
+ * Ingestion (SURVEY.md §2.1, S1-S4): trace CSVs + label CSV -> DataFrames.
  *
  * The reference reads one CSV per trace with pandas and discovers metric
  * columns from the header (`/root/reference/utils/get_data.py:19-20,77`).
@@ -109,45 +108,4 @@ object Sources {
     val union = ids.map(readTraceLong(spark, dataFolder, _)).reduce(_ unionByName _)
     (union, featureOrder)
   }
-
-  /** Driver testdata parquet (TESTDATA.md). */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /**
-   * Persist a DataFrame as a bucketed + sorted managed table: repeated
-   * joins/aggregations on `bucketCol` read the bucket layout instead of
-   * shuffling — at fact-table scale, paying the shuffle ONCE at write
-   * time and never again is the difference between a co-located
-   * sort-merge join and reshuffling 100 TB per query. Both sides of a
-   * join must be bucketed on the join key with the same bucket count for
-   * the exchange to disappear (SourcesSpec proves it on the plan).
-   */
-  def writeBucketed(
-      df: DataFrame, tableName: String,
-      bucketCol: String, nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(nBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(tableName)
-
-  /**
-   * Hive-style partitioned parquet layout (`.../col=value/part-*.parquet`)
-   * — the directory-level complement of bucketing: a filter on the
-   * partition column prunes whole directories at PLANNING time, so a
-   * per-language (or per-date) query over a 100-TB corpus opens only its
-   * slice's files. The `dynamic` partitionOverwriteMode write OPTION
-   * (scoped to this one write — no session-global conf flip) makes a
-   * re-run replace exactly the partitions present in `df` and leave the
-   * rest of the lake untouched (the idempotent-backfill contract;
-   * `static` mode would drop every other partition). BucketingSpec
-   * proves both properties — pruning on the plan, surgical overwrite on
-   * disk.
-   */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(path)
 }

@@ -1,118 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.Sources
 
 /**
- * Proof-on-the-plan for the bucketing scale claim: a join of two tables
- * bucketed on the join key with the same bucket count runs WITHOUT a
- * shuffle exchange — the bucket layout already provides the required
- * distribution, so the shuffle is paid once at write time and never per
- * query. The same join over plain parquet shows the two exchanges the
- * bucketed plan avoids.
+ * Storage-layout evolution of the lake: parquet batches written before
+ * and after a schema change read back as ONE table, with nulls for the
+ * columns older files lack.
  */
 class BucketingSpec extends AnyFunSuite {
-
-  private lazy val warehouse =
-    java.nio.file.Files.createTempDirectory("graft-warehouse").toString
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("bucketing-spec")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  /** getOrCreate may hand us another spec's session (default warehouse),
-    * so a leftover table directory from a previous JVM would make
-    * saveAsTable's CREATE fail — drop both catalog entry and location. */
-  private def dropTableAndLocation(tbl: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    val loc = new java.io.File(wh, tbl)
-    if (loc.exists()) rm(loc)
-  }
-
-  test("co-located join on bucketed tables plans with ZERO shuffle exchanges") {
-    import spark.implicits._
-    val orders = (1L to 1000L).map(k => (k, s"order_$k")).toDF("key", "o_payload")
-    val items = (1L to 3000L).map(i => (i % 1000 + 1, i)).toDF("key", "item_id")
-
-    Seq("orders_b", "items_b").foreach(dropTableAndLocation)
-    Sources.writeBucketed(orders, "orders_b", "key", nBuckets = 4)
-    Sources.writeBucketed(items, "items_b", "key", nBuckets = 4)
-
-    val bucketedJoin = spark.table("orders_b").join(spark.table("items_b"), "key")
-    val bucketedPlan = bucketedJoin.queryExecution.executedPlan.toString
-    val shuffles = "Exchange hashpartitioning".r.findAllIn(bucketedPlan).size
-    assert(shuffles == 0, s"bucketed join still shuffles:\n$bucketedPlan")
-    assert(bucketedJoin.count() == 3000)
-
-    // the identical join over non-bucketed data pays two exchanges
-    val plainJoin = orders.join(items, "key")
-    val plainShuffles =
-      "Exchange hashpartitioning".r.findAllIn(plainJoin.queryExecution.executedPlan.toString).size
-    assert(plainShuffles >= 2, s"expected shuffles on the plain join, got $plainShuffles")
-    assert(plainJoin.count() == 3000)
-
-    // bucket-key aggregation also rides the layout: no exchange before
-    // the final aggregate
-    val agg = spark.table("items_b").groupBy("key").agg(count(lit(1)).as("n"))
-    val aggShuffles =
-      "Exchange hashpartitioning".r.findAllIn(agg.queryExecution.executedPlan.toString).size
-    assert(aggShuffles == 0, "bucketed aggregation should not shuffle")
-    assert(agg.count() == 1000)
-  }
-
-  test("partitioned layout: directory pruning on the plan, dynamic overwrite on disk") {
-    import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-part").toString + "/docs"
-    val docs = Seq(
-      (1L, "en", "hello"), (2L, "en", "world"),
-      (3L, "de", "hallo"), (4L, "fr", "salut")).toDF("doc_id", "lang", "text")
-    Sources.writePartitioned(docs, path, "lang")
-
-    // hive-style directories exist
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("lang=de", "lang=en", "lang=fr"))
-
-    // a partition-column filter prunes to ONE directory at planning time:
-    // the executed scan's numFiles metric equals the lang=en file count,
-    // not the table's total (inputFiles is pre-pruning, so metrics are
-    // the honest witness)
-    val filtered = spark.read.parquet(path).where(col("lang") === "en")
-    val scan = filtered.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(lang"),
-      s"partition filter not pushed:\n$scan")
-    assert(filtered.collect().length == 2)
-    def files(dir: String) = new java.io.File(s"$path/$dir").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    val scanNode = filtered.queryExecution.executedPlan.collectLeaves()
-      .find(_.nodeName.contains("Scan")).get
-    val numFilesRead = scanNode.metrics("numFiles").value
-    assert(numFilesRead == files("lang=en"),
-      "scan should read only the lang=en directory's files")
-    assert(numFilesRead < files("lang=en") + files("lang=de") + files("lang=fr"),
-      "pruned scan must read strictly fewer files than the whole table")
-
-    // dynamic overwrite: rewriting ONLY lang=en rows replaces that
-    // partition and leaves de/fr untouched (idempotent backfill)
-    val enFix = Seq((1L, "en", "hello2"), (9L, "en", "new")).toDF("doc_id", "lang", "text")
-    Sources.writePartitioned(enFix, path, "lang")
-    val after = spark.read.parquet(path)
-    assert(after.count() == 4)
-    assert(after.where(col("lang") === "en").select("text")
-      .collect().map(_.getString(0)).sorted.toSeq == Seq("hello2", "new"))
-    assert(after.where(col("lang") =!= "en").count() == 2)
-  }
 
   test("schema evolution: mergeSchema unifies old and new batch layouts") {
     import spark.implicits._

@@ -11,8 +11,9 @@ import graft.operators.Dedup
  * spec proves it bit-identical to the distributed min-label /
  * pointer-jump fixpoint on the component shapes that exercise every
  * union order (path, star, clique, multi-component, self-loop,
- * duplicate/reversed edges), and exercises the above-gate fallback and
- * the gate-disabled dispatch.
+ * duplicate/reversed edges), exercises the above-gate fallback and
+ * the gate-disabled dispatch, and checks that pairs with a null endpoint
+ * are dropped the same way on both sides of the gate.
  */
 class DedupSizedSpec extends AnyFunSuite {
 
@@ -62,6 +63,20 @@ class DedupSizedSpec extends AnyFunSuite {
     assert(labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 1L)) == reference)
     // maxDriverEdges <= 0 skips the gate count entirely
     assert(labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 0L)) == reference)
+  }
+
+  test("null endpoints are dropped identically below and above the gate") {
+    import spark.implicits._
+    // nullable long columns: a pair with a null endpoint is no edge on
+    // either branch (node 3 and node 9 only ever pair with a null)
+    val df = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)),
+      (None, None), (Some(5L), Some(6L)), (Some(9L), None))
+      .toDF("doc_a", "doc_b")
+    val driver = labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 1L << 20))
+    val distributed = labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 1L))
+    assert(driver == distributed, s"driver $driver != distributed $distributed")
+    assert(driver == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
   test("non-long keys dispatch to the distributed loop") {

@@ -78,7 +78,8 @@ class StreamingSpec extends AnyFunSuite {
       StreamObs("w1", "f1", 3L, 1, 10.0), StreamObs("w1", "f1", 4L, 1, 11.0),
       StreamObs("w1", "f2", 3L, 0, 10.0), StreamObs("w1", "f2", 4L, 1, 11.0))
     val input = MemoryStream[StreamObs]
-    val exps = StreamingOps.explainOnClose(input.toDS(), Seq("f1", "f2", "f3"))
+    val exps = StreamingOps.explainOnCloseCfg(input.toDS(), Seq("f1", "f2", "f3"),
+      ExstreamConfig(applyWorstCase = true))
     val q = exps.writeStream.outputMode("append")
       .format("memory").queryName("exps").start()
     input.addData(w1: _*)
@@ -92,7 +93,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.head.getAs[Int]("n_obs") == 10)
     assert(out.head.getSeq[String](2) == Seq("f1"))
     // and the streaming answer is exactly the pure-kernel (= batch) answer
-    assert(StreamingOps.explainBuffered(w1, Seq("f1", "f2", "f3"), applyWorstCase = true) == Seq("f1"))
+    assert(StreamingOps.explainBuffered(w1, Seq("f1", "f2", "f3"),
+      ExstreamConfig(applyWorstCase = true)) == Seq("f1"))
   }
 
   test("streaming explanation matches batch on ALL FOUR configs (cluster x fp)") {
@@ -181,7 +183,8 @@ class StreamingSpec extends AnyFunSuite {
       StreamObs("w1", "f1", 3L, 1, 10.0), StreamObs("w1", "f1", 4L, 1, 11.0),
       StreamObs("w1", "f2", 3L, 0, 10.0), StreamObs("w1", "f2", 4L, 1, 11.0))
     val input = MemoryStream[StreamObs]
-    val exps = StreamingOps.explainOnClose(input.toDS(), Seq("f1", "f2", "f3"),
+    val exps = StreamingOps.explainOnCloseCfg(input.toDS(), Seq("f1", "f2", "f3"),
+      ExstreamConfig(applyWorstCase = true),
       timeout = org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout(),
       timeoutSpanMs = 10L, watermarkDelay = "0 seconds")
     val q = exps.writeStream.outputMode("append")
@@ -203,32 +206,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.head.getAs[Int]("n_obs") == 10)
     // the force-closed window gets the SAME answer the close marker gives
     assert(out.head.getSeq[String](2) == Seq("f1"))
-  }
-
-  test("event-time timeout: span assembly force-closes a marker-less window") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamObs]
-    val closed = StreamingOps.assembleWindows(input.toDS(),
-      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout(),
-      timeoutSpanMs = 10L, watermarkDelay = "0 seconds")
-    val q = closed.writeStream.outputMode("append")
-      .format("memory").queryName("closed_et").start()
-    input.addData(
-      StreamObs("w1", "f1", 1L, 0, 1.0),
-      StreamObs("w1", "f2", 2L, 1, 2.0))
-    q.processAllAvailable()
-    assert(spark.table("closed_et").count() == 0)
-    input.addData(StreamObs("w2", "f1", 50000L, 0, 5.0))
-    q.processAllAvailable()
-    input.addData(StreamObs("w2", "f1", 50001L, 0, 6.0))
-    q.processAllAvailable()
-    val out = spark.table("closed_et").collect()
-    q.stop()
-    assert(out.length == 1)
-    assert(out.head.getAs[String]("window_key") == "w1")
-    assert(out.head.getAs[Int]("n_obs") == 2)
-    assert(out.head.getSeq[String](2) == Seq("f1", "f2"))
   }
 
   test("session windows close on gap and finalize past the watermark (q50's streaming twin)") {
@@ -281,89 +258,6 @@ class StreamingSpec extends AnyFunSuite {
     assert((ids intersect Set(1L, 2L, 4L)).size == 1) // exactly one alpha-beta survives
   }
 
-  test("ingest near-dup flagging quarantines a near-copy of the static corpus") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val template = "the quick brown fox jumps over the lazy dog again and again every day"
-    val corpus = Seq((100L, template),
-      (101L, "an entirely different corpus document about engines and plans"))
-      .toDF("doc_id", "text")
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val flagged = StreamingOps.nearDupCandidatesIngest(
-      input.toDF().toDF("ts", "doc_id", "text"), corpus,
-      idCol = "doc_id", textCol = "text", watermark = "10 minutes")
-    val q = flagged.writeStream.outputMode("append")
-      .format("memory").queryName("quarantine").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    input.addData(
-      // near-copy: one word changed -> most shingles (and bands) shared
-      (t0, 1L, "the quick brown fox jumps over the lazy cat again and again every day"),
-      // novel doc: shares no 3-gram shingle with the corpus
-      (t0, 2L, "completely novel text with fresh words nowhere in the registry at all"))
-    q.processAllAvailable()
-    val out = spark.table("quarantine").collect().map(_.getAs[Long]("doc_id")).toSet
-    q.stop()
-    assert(out == Set(1L), s"quarantine stream got $out")
-  }
-
-  test("streaming CDC re-crawl gate quarantines the shifted near-copy") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = (1 to 200).map(i => s"tok$i").mkString(" ")
-    val corpus = Seq(base).toDF("text")
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val gate = StreamingOps.cdcRecrawlIngest(
-      input.toDF().toDF("ts", "doc_id", "text"), corpus,
-      idCol = "doc_id", textCol = "text", watermark = "1 minute", minKnown = 3L)
-    val q = gate.writeStream.outputMode("append")
-      .format("memory").queryName("cdcq").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    input.addData(
-      // shifted near-copy: the 1-token prepend shifts every byte
-      // offset, but CDC boundaries resynchronize — most chunks collide
-      (t0, 1L, "inserted " + base),
-      // novel doc: no chunk in the registry
-      (t0, 2L, (1 to 200).map(i => s"new$i").mkString(" ")))
-    q.processAllAvailable()
-    // advance the watermark past the window so append mode finalizes
-    input.addData((new java.sql.Timestamp(t0.getTime + 20 * 60 * 1000), 3L,
-      "watermark pusher x"))
-    q.processAllAvailable()
-    val rows = spark.table("cdcq").collect()
-    q.stop()
-    assert(rows.map(_.getAs[Long]("doc_id")).toSet == Set(1L),
-      s"quarantine got ${rows.mkString(",")}")
-    // the streamed count equals the batch-side kernel computation
-    val reg = graft.functions.ShingleKernel.cdcChunkHashes(base, 3, 16).toSet
-    val batchKnown = graft.functions.ShingleKernel
-      .cdcChunkHashes("inserted " + base, 3, 16).count(reg.contains).toLong
-    assert(batchKnown >= 3L)
-    assert(rows.head.getAs[Long]("n_known_chunks") == batchKnown)
-  }
-
-  test("stateful span assembly emits a closed window on the close marker") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamObs]
-    val closed = StreamingOps.assembleWindows(input.toDS())
-    val q = closed.writeStream.outputMode("append")
-      .format("memory").queryName("closed").start()
-    input.addData(
-      StreamObs("w1", "f1", 1L, 0, 1.0),
-      StreamObs("w1", "f2", 2L, 1, 2.0),
-      StreamObs("w2", "f1", 1L, 0, 5.0))
-    q.processAllAvailable()
-    assert(spark.table("closed").count() == 0) // nothing closed yet
-    input.addData(StreamObs("w1", "", 3L, -1, 0.0)) // close w1
-    q.processAllAvailable()
-    val out = spark.table("closed").collect()
-    q.stop()
-    assert(out.length == 1)
-    assert(out.head.getAs[String]("window_key") == "w1")
-    assert(out.head.getAs[Int]("n_obs") == 2)
-    assert(out.head.getSeq[String](2) == Seq("f1", "f2"))
-  }
-
   test("stream-static enrichment join stays broadcast (no stateful shuffle)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -411,6 +305,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(r.getAs[Long]("user_id") == 1L && r.getAs[Long]("click_id") == 100L &&
       r.getAs[Long]("purchase_id") == 900L && r.getAs[Double]("value") == 42.0)
   }
+
   test("two-window trace: the FP series registry reproduces batch where window-local diverges") {
     import spark.implicits._
     // The r4 verdict's streaming boundary, narrowed: batch FP matches a
@@ -474,110 +369,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(regW1 == batch("w1"), s"registry w1 ${regW1} != batch ${batch("w1")}")
   }
 
-  test("streaming funnel attribution matches the batch chained as-of joins (q70's twin)") {
-    import spark.implicits._
-    import graft.operators.AsofJoin
-    import graft.streaming.StreamingOps.FunnelEvent
-    implicit val sqlCtx = spark.sqlContext
-
-    val baseUs = 1700000000000000L // epoch micros
-    def us(s: Int) = baseUs + s * 1000000L
-    // the fixture exercises every parity hazard: at-or-before ties
-    // (click AT the purchase time wins over an earlier click), same-us
-    // click duplicates (collapse to max event_id), purchase before any
-    // click (dropped), click with no preceding view (partial funnel),
-    // and a view at exactly the click time (counts)
-    val fixture = Seq(
-      FunnelEvent(1L, 1L, us(1), "view"), FunnelEvent(1L, 2L, us(2), "click"),
-      FunnelEvent(1L, 3L, us(3), "view"), FunnelEvent(1L, 5L, us(4), "click"),
-      FunnelEvent(1L, 4L, us(4), "purchase"), FunnelEvent(1L, 6L, us(5), "purchase"),
-      FunnelEvent(2L, 10L, us(2), "purchase"), // no click yet -> never emits
-      FunnelEvent(2L, 11L, us(3), "click"), // no view before it
-      FunnelEvent(2L, 12L, us(6), "purchase"),
-      FunnelEvent(3L, 19L, us(2), "view"),
-      FunnelEvent(3L, 20L, us(2), "click"), FunnelEvent(3L, 21L, us(2), "click"),
-      FunnelEvent(3L, 22L, us(2), "purchase"))
-
-    // batch answer: q70's exact chain over the same rows
-    val e = fixture.toDF()
-    val clicks = e.where(col("event_type") === "click")
-      .groupBy("user_id", "us").agg(max("event_id").as("click_id"))
-    val views = e.where(col("event_type") === "view")
-      .groupBy("user_id", "us").agg(max("event_id").as("view_id"))
-    val purchases = e.where(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"), col("us"))
-    val withClick = AsofJoin.asofJoin(purchases, clicks, "user_id", "us", Seq("click_id"))
-      .where(col("ref_click_id").isNotNull)
-      .select(col("user_id"), col("purchase_id"), col("ref_us").as("us"),
-        col("ref_click_id").as("click_id"))
-    val batchHits = AsofJoin
-      .asofJoin(withClick, views, "user_id", "us", Seq("view_id"), refPrefix = "v_")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3),
-        Option(r.get(5)).map(_.asInstanceOf[Long]), !r.isNullAt(5)))
-      .toSet
-
-    // streaming answer: replay out of order across micro-batches (late
-    // arrivals stay within the 10 s watermark slack), then advance the
-    // watermark with sentinel traffic so timeouts flush idle users
-    val input = MemoryStream[FunnelEvent]
-    val q = StreamingOps.funnelAttribution(input.toDS(), watermarkDelay = "10 seconds")
-      .writeStream.outputMode("append").format("memory").queryName("funnel").start()
-    val (late, first) = fixture.partition(ev => ev.us <= us(2)) // deliver early rows LAST
-    input.addData(first: _*); q.processAllAvailable()
-    input.addData(late: _*); q.processAllAvailable()
-    input.addData(FunnelEvent(99L, 900L, us(100), "view")); q.processAllAvailable()
-    input.addData(FunnelEvent(99L, 901L, us(101), "view")); q.processAllAvailable()
-    val streamHits = spark.table("funnel").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        Option(r.get(3)).map(_.asInstanceOf[Long]), r.getBoolean(4)))
-      .toSet
-    q.stop()
-
-    assert(batchHits.nonEmpty && batchHits.exists(_._4.isEmpty),
-      "fixture must produce both full and partial funnels")
-    assert(streamHits == batchHits, s"stream $streamHits != batch $batchHits")
-    // the dropped no-click purchase stayed dropped on both sides
-    assert(!streamHits.exists(_._2 == 10L))
-  }
-
-  test("funnel register TTL drops very late purchases; default keeps unbounded as-of") {
-    import spark.implicits._
-    import graft.streaming.StreamingOps.FunnelEvent
-    implicit val sqlCtx = spark.sqlContext
-
-    val baseUs = 1700000000000000L
-    def us(s: Int) = baseUs + s * 1000000L
-    // click/view early, purchase ~94 s later; watermark sentinel in
-    // between ages the registers far past a 5 s TTL before the purchase
-    // arrives
-    def run(name: String, ttlMs: Long): Set[(Long, Long, Long)] = {
-      val input = MemoryStream[FunnelEvent]
-      val q = StreamingOps.funnelAttribution(input.toDS(),
-          watermarkDelay = "10 seconds", registerTtlMs = ttlMs)
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      input.addData(FunnelEvent(1L, 1L, us(0), "view"), FunnelEvent(1L, 2L, us(1), "click"))
-      q.processAllAvailable()
-      input.addData(FunnelEvent(99L, 900L, us(100), "view")); q.processAllAvailable()
-      input.addData(FunnelEvent(99L, 901L, us(101), "view")); q.processAllAvailable()
-      input.addData(FunnelEvent(1L, 3L, us(95), "purchase")); q.processAllAvailable()
-      input.addData(FunnelEvent(99L, 902L, us(200), "view")); q.processAllAvailable()
-      input.addData(FunnelEvent(99L, 903L, us(201), "view")); q.processAllAvailable()
-      val hits = spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      q.stop()
-      hits
-    }
-
-    // default: unbounded as-of — the 94 s-late purchase still attributes
-    val unbounded = run("funnel_nottl", Long.MaxValue)
-    assert(unbounded == Set((1L, 3L, 2L)), s"default must attribute: $unbounded")
-    // finite TTL: the click register aged out before the purchase arrived,
-    // so attribution is (by contract) dropped — no emission at all
-    val ttl = run("funnel_ttl", 5000L)
-    assert(ttl.isEmpty, s"TTL'd register must not attribute: $ttl")
-  }
-
   test("PII redaction at ingest reproduces the batch q106 rows exactly") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -623,317 +414,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == batch, s"stream ${got.size} rows != batch ${batch.size}")
   }
 
-  test("streaming inter-arrival stats replay to the batch q190 aggregates") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val limb = BigInt("1000000000000000000")
-    val ev = Queries.t(spark, sf, "events")
-      .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-        col("ts").as("us"), col("event_id").cast("long").as("event_id"))
-    // batch expectation: q190's pre-division aggregates via the lag window
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id", "event_type").orderBy("us", "event_id")
-    val expected = ev.withColumn("gap", col("us") - lag("us", 1).over(w))
-      .where(col("gap").isNotNull)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("gap").as("s"),
-        sum(expr("cast(gap as decimal(38,0)) * gap")).as("q"))
-      .collect().map(r => (r.getString(0),
-        (r.getLong(1), r.getLong(2), BigInt(r.getDecimal(3).toBigInteger)))).toMap
-    assert(expected.nonEmpty)
-    // replay in global event-time order (the in-order ingest contract)
-    val rows = ev.orderBy("us", "event_id")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val input = MemoryStream[(Long, String, Long, Long)]
-    val q = StreamingOps.interarrivalStatsIngest(
-        input.toDF().toDF("user_id", "event_type", "us", "event_id"))
-      .writeStream.outputMode("update").format("memory")
-      .queryName("gap_ingest").start()
-    rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
-      input.addData(chunk.toIndexedSeq); q.processAllAvailable()
+  test("explainBuffered on bad windows: empty, one-class and constant-feature windows " +
+      "have a defined answer on all four configs") {
+    // pure: no Spark session is touched
+    val order = Seq("fa", "fk")
+    def obs(f: String, cls: Int, ts: Seq[Long], vals: Seq[Double]) =
+      ts.zip(vals).map { case (t, v) => StreamObs("w", f, t, cls, v) }
+    val faRef = obs("fa", 0, 1L to 8L, Seq(5.0, 1.0, 5.0, 1.0, 5.0, 1.0, 5.0, 1.0))
+    val faAno = obs("fa", 1, 21L to 24L, Seq(9.0, 9.5, 10.0, 9.7))
+    // fk never moves: zero variance in both classes
+    val fkRef = obs("fk", 0, 1L to 8L, Seq.fill(8)(3.0))
+    val fkAno = obs("fk", 1, 21L to 24L, Seq.fill(4)(3.0))
+    val windows: Seq[(String, Seq[StreamObs], Seq[String])] = Seq(
+      ("empty", Seq.empty, Seq.empty),
+      ("anomaly-only", faAno ++ fkAno, Seq.empty),
+      ("reference-only", faRef ++ fkRef, Seq.empty),
+      // the constant feature's correlation is undefined (no cluster
+      // edge) and its worst-case reward is finite and below fa's, so the
+      // leap cut keeps fa alone
+      ("constant feature", faRef ++ faAno ++ fkRef ++ fkAno, Seq("fa")))
+    for {
+      cluster <- Seq(false, true)
+      fp <- Seq(false, true)
+      (name, buf, expected) <- windows
+    } {
+      val cfg = ExstreamConfig(cluster = cluster, falsePositiveFiltering = fp)
+      val got = StreamingOps.explainBuffered(buf, order, cfg)
+      assert(got == expected, s"$name cluster=$cluster fp=$fp: got $got")
     }
-    val finals = spark.table("gap_ingest").as[StreamingOps.GapStatsRow]
-      .collect()
-      .groupBy(r => (r.event_type, r.user_id))
-      .map { case (_, rs) => rs.maxBy(_.n_gaps) }
-    q.stop()
-    val got = finals.groupBy(_.event_type).map { case (et, rs) =>
-      (et, (rs.map(_.n_gaps).sum, rs.map(_.sgap).sum,
-        rs.map(r => BigInt(r.qgap_hi) * limb + r.qgap_lo).sum))
-    }
-    assert(got == expected,
-      s"streaming per-type gap aggregates diverge: $got vs $expected")
-  }
-
-  test("streaming seasonal anomaly detector replays to the batch q99 answer") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    // batch answer over the LIVE testdata (the oracle-checked query)
-    val expected = Queries.queries("q99_seasonal_anomaly")(spark, sf)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      .toSet
-    assert(expected.nonEmpty, "fixture data must contain seasonal spikes")
-
-    // baseline trained in batch over the same recorded history
-    val recorded = Queries.t(spark, sf, "events")
-      .select(timestamp_micros(col("ts")).as("ts"), col("event_type"))
-      .localCheckpoint(false)
-    val baseline = StreamingOps.seasonalBaseline(recorded)
-
-    // replay the recorded stream in event-time order across micro-batches
-    val rows = recorded.orderBy("ts")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1)))
-    val input = MemoryStream[(java.sql.Timestamp, String)]
-    val q = StreamingOps.seasonalAnomalies(
-        input.toDF().toDF("ts", "event_type"), baseline, watermark = "10 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("seasonal").start()
-    rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
-      input.addData(chunk.toIndexedSeq); q.processAllAvailable()
-    }
-    // advance the watermark past the last window so every hour closes
-    val flushTs = new java.sql.Timestamp(rows.last._1.getTime + 48L * 3600 * 1000)
-    input.addData((flushTs, "view")); q.processAllAvailable()
-    input.addData((new java.sql.Timestamp(flushTs.getTime + 3600000L), "view"))
-    q.processAllAvailable()
-    val got = spark.table("seasonal").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      .toSet
-    q.stop()
-    // the flush sentinels sit 48 h past the recorded span in their own
-    // buckets; drop anything outside the recorded bucket range before
-    // comparing (the detector itself has no such notion of "fixture")
-    val maxRecordedBucket = expected.map(_._2).max max
-      (rows.last._1.getTime / 3600000L)
-    val gotRecorded = got.filter(_._2 <= maxRecordedBucket)
-    assert(gotRecorded == expected,
-      s"stream ${gotRecorded.size} anomalies != batch ${expected.size}")
-  }
-
-  test("classifier scoring at ingest reproduces the driver margins exactly") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // small deterministic weight vector; docs exercise empty-ish text,
-    // repeats, and multi-space runs
-    val w: Seq[Long] = (0 until 64).map(b => (b * 7 % 13).toLong - 6L) :+ 5L
-    val docs = Seq(
-      (1L, "hello world hello"),
-      (2L, "der schnelle braune fuchs"),
-      (3L, "a  b   c"),
-      (4L, "one"),
-      (5L, "")).toSeq
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.classifierScoreIngest(
-        input.toDF().toDF("doc_id", "text"), w)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("clf_ingest").start()
-    input.addData(docs)
-    q.processAllAvailable()
-    val got = spark.table("clf_ingest").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2)))).toMap
-    q.stop()
-    // driver recompute with the identical md5 bucket definition
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val expected = docs.map { case (id, text) =>
-      val toks = text.split(graft.functions.TextFunctions.wsClass, -1)
-      val m = w(64) + toks.map { t =>
-        val h = md.digest(t.getBytes("UTF-8"))
-        val b = ((((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-          ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)) % 64).toInt
-        w(b)
-      }.sum
-      id -> (m, if (m > 0) 1 else 0)
-    }.toMap
-    assert(got == expected, s"stream $got != driver $expected")
-  }
-
-  test("streaming RTBF: a 3-batch deletion stream equals one rtbfApply of the union") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Dedup
-    // the RtbfSpec branch fixture: path 1-2-3 (2 a bridge), triangle
-    // 4-5-6, singletons 7/8, triangle 9-10-11 (9 the canonical rep)
-    val allDocs = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L, 11L)
-    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L), (4L, 6L),
-      (9L, 10L), (10L, 11L), (9L, 11L)).toDF("doc_a", "doc_b")
-    val postings = Seq(
-      (101L, 2L), (101L, 3L), (101L, 5L),
-      (102L, 2L), (102L, 7L),
-      (103L, 1L),
-      (104L, 7L), (104L, 8L)).toDF("h", "doc_id")
-    val firstOcc = postings.groupBy("h").agg(min("doc_id").as("doc_id"))
-    val clustersFull = {
-      val cl = Dedup.dupClusters(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      allDocs.map(d => (d, cl.getOrElse(d, d))).toDF("doc_id", "cluster_id")
-    }
-    def snap(st: Dedup.RtbfState): (Map[Long, Long], Map[Long, Long]) = (
-      st.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      st.firstOcc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-
-    val registry = new StreamingOps.RtbfRegistry(
-      Dedup.RtbfState(clustersFull, pairs, postings, firstOcc))
-    val input = MemoryStream[Long]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("rtbf-ingest").toString
-    val q = StreamingOps.rtbfIngest(
-      input.toDF().toDF("doc_id"), registry, ckpt)
-    // deletions arrive over three micro-batches, each touching a
-    // different branch (bridge split, singleton, rep re-election)
-    for (batch <- Seq(Seq(2L), Seq(7L), Seq(9L))) {
-      input.addData(batch)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val (streamClusters, streamFirst) = snap(registry.state)
-
-    val (bc, bf) = Dedup.rtbfApply(clustersFull, pairs, postings, firstOcc,
-      Seq(2L, 7L, 9L).toDF("doc_id"))
-    val batchClusters = bc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batchFirst = bf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(streamClusters == batchClusters,
-      s"stream $streamClusters != union batch $batchClusters")
-    assert(streamFirst == batchFirst,
-      s"stream $streamFirst != union batch $batchFirst")
-    // evidence tables were maintained too: no surviving pair touches a
-    // deleted doc, no posting row belongs to one
-    val del = Set(2L, 7L, 9L)
-    assert(registry.state.pairs.collect()
-      .forall(r => !del(r.getLong(0)) && !del(r.getLong(1))))
-    assert(registry.state.postings.collect().forall(r => !del(r.getLong(1))))
-  }
-
-  test("uniform sample ingest: streaming bottom-K equals the batch stratum head") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("lang", "doc_id")
-    // replay in 3 arbitrary batches — the hash-ordered sample is a pure
-    // function of the SET, so the split must not matter
-    val rows = docs.collect().map(r => (r.getString(0), r.getLong(1)))
-    val input = MemoryStream[(String, Long)]
-    val q = StreamingOps.uniformSampleIngest(
-        input.toDF().toDF("lang", "doc_id"), "lang", "doc_id", k = 7)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("usample").start()
-    rows.grouped(180).foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
-    q.stop()
-    // recover: latest row per (stratum, doc) by n_seen, drop tombstones
-    val rec = spark.table("usample")
-      .groupBy("stratum", "doc_id")
-      .agg(max_by(col("live"), col("n_seen")).as("live"))
-      .where(col("live") === 1)
-      .select(col("stratum"), col("doc_id"))
-      .as[(String, Long)].collect().toSet
-    val batch = graft.operators.CorpusSharding
-      .stratumHead(docs, prefixHexChars = 1, nPerStratum = 7)
-      .select(col("lang"), col("doc_id"))
-      .as[(String, Long)].collect().toSet
-    assert(rec == batch,
-      s"streaming sample != batch stratum head: only-stream=${rec.diff(batch)} only-batch=${batch.diff(rec)}")
-    assert(rec.groupBy(_._1).forall(_._2.size == 7))
-  }
-
-  test("streaming CUSUM replay equals the batch q228 rows exactly (recursion == cum-minus-prefix-min)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    // the batch statistic and its parameters, recomputed with q228's
-    // own expressions on the same day relation
-    val batch = graft.Queries.queries("q228_cusum_bursts")(spark, sf)
-      .collect().map(r => (r.getString(0),
-        (r.getDouble(2), r.getDouble(3), r.getInt(4))))
-      .toMap
-    val dv = graft.Queries.queries("q228_cusum_bursts")(spark, sf)
-      .select("day", "v").as[(String, Long)].collect().sortBy(_._1)
-    val st = spark.createDataset(dv.toSeq).toDF("day", "v")
-      .agg(count(lit(1)).as("n"), sum("v").as("sv"),
-        sum(expr("cast(v as decimal(38,0)) * v")).as("qv"))
-      .select(expr("cast((cast(sv as decimal(38,0)) * 1000000) div n as bigint)"),
-        expr("cast(round(sqrt(cast(cast(n as decimal(38,0)) * qv - " +
-          "cast(sv as decimal(38,0)) * sv as double)) / n * 1000000, 0) as bigint)"))
-      .collect().head
-    val (mum, sm) = (st.getLong(0), st.getLong(1))
-    val input = MemoryStream[(String, Long, Long)]
-    val q = StreamingOps.cusumIngest(
-        input.toDF().toDF("key", "seq", "v"), mum = mum, sm = sm)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("cusum").start()
-    // replay the day relation in three micro-batches, in day order
-    val seqd = dv.zipWithIndex.map { case ((day, v), i) => (day, i.toLong, v) }
-    seqd.grouped(11).foreach { b =>
-      input.addData(b.map { case (_, i, v) => ("vol", i, v) }.toSeq: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val got = spark.table("cusum")
-      .groupBy("seq")
-      .agg(max_by(col("s_upper"), col("seq")).as("su"),
-        max_by(col("s_lower"), col("seq")).as("sl"),
-        max_by(col("is_burst"), col("seq")).as("b"))
-      .as[(Long, Long, Long, Int)].collect()
-      .map { case (i, su, sl, b) => i -> (su / 1e6, sl / 1e6, b) }.toMap
-    seqd.foreach { case (day, i, _) =>
-      val (bsu, bsl, bb) = batch(day)
-      val (gsu, gsl, gb) = got(i)
-      assert(gsu == bsu && gsl == bsl && gb == bb,
-        s"day $day: streaming ($gsu,$gsl,$gb) != batch ($bsu,$bsl,$bb)")
-    }
-  }
-
-  test("streaming cross-source contamination replay equals the batch first-seen recompute") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("source"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1) // arrival order = doc_id (the replay's seq)
-    val sources = docs.map(_._2).distinct.sorted
-    val bits = sources.zipWithIndex.toMap
-    // engineered head: guaranteed cross-source, same-source-dup and
-    // unique cases ahead of the live corpus (ids below the corpus range)
-    val head = Seq(
-      (-10L, sources(0), "contam-fixture-x"),
-      (-9L, sources(1), "contam-fixture-x"), // cross-source
-      (-8L, sources(0), "contam-fixture-x"), // same-source dup (and cross)
-      (-7L, sources(0), "contam-fixture-y"),
-      (-6L, sources(0), "contam-fixture-y")) // same-source dup only
-    val all = (head ++ docs).zipWithIndex
-      .map { case ((id, s, t), i) => (id, s, t, i.toLong) }
-
-    val input = MemoryStream[(Long, String, String, Long)]
-    val q = StreamingOps.crossSourceContamIngest(
-        input.toDF().toDF("doc_id", "source", "text", "seq"), bits)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("contam").start()
-    all.grouped(97).foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("contam")
-      .select("doc_id", "cross_source", "dup_same_source")
-      .as[(Long, Int, Int)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-
-    // batch recompute: prior-arrival source sets per content, driver fold
-    val seen = scala.collection.mutable.Map.empty[String, Set[String]]
-    all.foreach { case (id, src, text, _) =>
-      val prior = seen.getOrElse(text, Set.empty)
-      val expect = (if ((prior - src).nonEmpty) 1 else 0,
-        if (prior.contains(src)) 1 else 0)
-      assert(got(id) == expect,
-        s"doc $id ($src): streaming ${got(id)} != batch $expect")
-      seen(text) = prior + src
-    }
-    assert(got(-9L) == ((1, 0)) && got(-8L) == ((1, 1)) && got(-6L) == ((0, 1)))
-    // reconcile with q227's batch matrix on the corpus docs alone (the
-    // engineered head's texts don't occur in the corpus): some corpus
-    // doc flags cross_source iff the batch matrix found shared hashes
-    val anyCrossCorpus = docs.exists { case (id, _, _) => got(id)._1 == 1 }
-    val batchShared = graft.Queries.queries("q227_cross_source_dups")(
-      spark, "/root/testdata/sf0.001")
-      .agg(coalesce(sum("n_shared"), lit(0L))).collect().head.getLong(0)
-    assert(anyCrossCorpus == (batchShared > 0L),
-      s"streaming cross flags disagree with q227 (shared=$batchShared)")
+    val fkAll = fkRef ++ fkAno
+    val fkReward = graft.functions.EntropyCore.reward(
+      graft.functions.EntropyCore.classEntropy(4, 8),
+      fkAll.map(_.value).toArray, fkAll.map(_.type_data).toArray)
+    assert(!fkReward.isNaN && !fkReward.isInfinite && fkReward > 0.0, s"fk reward $fkReward")
   }
 }

@@ -1,32 +1,31 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
 
 /**
- * STREAMING STATE ENVELOPE (r12 verdict #7: batch queries carry
- * time+bytes envelopes, the 16 streaming operators had no
- * regression-gated state measurements): for each stateful operator
- * class, run a deterministic fixture and read the state store's OWN
+ * Streaming state envelope: for the EXstream online operator
+ * (`StreamingOps.explainOnCloseCfg`) and each stateful streaming shape
+ * beside it, run a deterministic fixture and read the state store's OWN
  * telemetry (`StreamingQueryProgress.stateOperators` — numRowsTotal /
  * memoryUsedBytes), then gate:
  *
  *  - state ROWS exactly — they are a deterministic function of the
  *    fixture and the operator's state keying, and each assertion IS
- *    the operator's boundedness claim (sketch state counts WINDOWS not
- *    users; MG state counts SHARDS not tokens; watermark dedup counts
- *    keys INSIDE the horizon and provably evicts after it);
+ *    the operator's boundedness claim (one row per OPEN explanation
+ *    window, removed at close; sketch state counts WINDOWS not users;
+ *    watermark dedup counts keys INSIDE the horizon and evicts after
+ *    it);
  *  - state BYTES under a generous cap (512 KiB per operator on these
  *    fixtures) — not a tight envelope (store overhead is JVM/version
  *    dependent) but a regression gate that catches a state key
  *    accidentally growing corpus-sized.
  *
  * The harvested values are committed as the streaming state table in
- * BASELINE.md (the RtbfScaleSpec measure-don't-claim discipline).
+ * BASELINE.md.
  */
 class StreamingStateSpec extends AnyFunSuite {
 
@@ -126,23 +125,6 @@ class StreamingStateSpec extends AnyFunSuite {
     assert(bytes1 < BytesCap && bytes2 < BytesCap)
   }
 
-  test("MG heavy hitters: state rows = shards, regardless of distinct tokens") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[String]
-    val hh = StreamingOps.heavyHittersIngest(input.toDS(), capacity = 3, shards = 2)
-    val q = hh.writeStream.outputMode("update")
-      .format("memory").queryName("ss_mg").start()
-    // 1000 instances over 100 distinct tokens through 2 shards of cap 3
-    input.addData((0 until 1000).map(i => s"tok_${i % 100}"): _*)
-    q.processAllAvailable()
-    val (rows, bytes) = stateOf(q)
-    q.stop()
-    report("heavyHittersIngest", rows, bytes)
-    assert(rows == 2L, s"MG state must be one row per SHARD (2), got $rows")
-    assert(bytes < BytesCap)
-  }
-
   test("session rollup: state rows = open sessions") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -163,51 +145,13 @@ class StreamingStateSpec extends AnyFunSuite {
     assert(bytes < BytesCap)
   }
 
-  test("uniform sample: state rows = strata, independent of stream length") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long)]
-    val sample = StreamingOps.uniformSampleIngest(
-      input.toDF().toDF("lang", "doc_id"), "lang", "doc_id", k = 3)
-    val q = sample.writeStream.outputMode("update")
-      .format("memory").queryName("ss_usample").start()
-    // 400 docs across 5 strata with a 3-doc sample each
-    input.addData((0 until 400).map(i => (s"lang_${i % 5}", i.toLong)): _*)
-    q.processAllAvailable()
-    val (rows, bytes) = stateOf(q)
-    q.stop()
-    report("uniformSampleIngest", rows, bytes)
-    assert(rows == 5L, s"state must be one row per STRATUM (5), got $rows")
-    assert(bytes < BytesCap)
-  }
-
-  test("inter-arrival stats: state rows = live (user, event_type) keys") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String, Long, Long)]
-    val q = StreamingOps.interarrivalStatsIngest(
-        input.toDF().toDF("user_id", "event_type", "us", "event_id"))
-      .writeStream.outputMode("update")
-      .format("memory").queryName("ss_gaps").start()
-    // 300 events over 10 users x 2 event types = 20 live keys
-    input.addData((0 until 300).map(i =>
-      ((i % 10).toLong, s"t${(i / 10) % 2}",
-        1700000000000000L + i * 1000000L, i.toLong)): _*)
-    q.processAllAvailable()
-    val (rows, bytes) = stateOf(q)
-    q.stop()
-    report("interarrivalStatsIngest", rows, bytes)
-    assert(rows == 20L,
-      s"state must be one row per live (user, event_type) key (20), got $rows")
-    assert(bytes < BytesCap)
-  }
-
   test("explanation-at-close: state rows = OPEN windows, removed at close") {
     import spark.implicits._
     import graft.streaming.StreamingOps.StreamObs
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[StreamObs]
-    val exps = StreamingOps.explainOnClose(input.toDS(), Seq("f1"))
+    val exps = StreamingOps.explainOnCloseCfg(input.toDS(), Seq("f1"),
+      ExstreamConfig(applyWorstCase = true))
     val q = exps.writeStream.outputMode("append")
       .format("memory").queryName("ss_explain").start()
     input.addData(
@@ -215,38 +159,17 @@ class StreamingStateSpec extends AnyFunSuite {
       StreamObs("w2", "f1", 1L, 0, 2.0))
     q.processAllAvailable()
     val (rows1, bytes1) = stateOf(q)
-    report("explainOnClose (2 open)", rows1, bytes1)
+    report("explainOnCloseCfg (2 open)", rows1, bytes1)
     assert(rows1 == 2L, s"expected 2 open windows, got $rows1")
     // close w1: its buffer must leave the store
     input.addData(StreamObs("w1", "", 3L, -1, 0.0))
     q.processAllAvailable()
     val (rows2, bytes2) = stateOf(q)
     q.stop()
-    report("explainOnClose (1 closed)", rows2, bytes2)
+    report("explainOnCloseCfg (1 closed)", rows2, bytes2)
     assert(rows2 == 1L, s"closed window must drop its state, got $rows2")
     assert(bytes1 < BytesCap && bytes2 < BytesCap)
   }
-
-  test("funnel attribution: state rows = users with live registers") {
-    import spark.implicits._
-    import graft.streaming.StreamingOps.FunnelEvent
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[FunnelEvent]
-    val baseUs = 1700000000000000L
-    val q = StreamingOps.funnelAttribution(input.toDS(), watermarkDelay = "10 seconds")
-      .writeStream.outputMode("append").format("memory").queryName("ss_funnel").start()
-    input.addData(
-      FunnelEvent(1L, 1L, baseUs, "click"),
-      FunnelEvent(2L, 2L, baseUs + 1000000L, "click"),
-      FunnelEvent(3L, 3L, baseUs + 2000000L, "view"))
-    q.processAllAvailable()
-    val (rows, bytes) = stateOf(q)
-    q.stop()
-    report("funnelAttribution", rows, bytes)
-    assert(rows == 3L, s"expected 3 users with live registers, got $rows")
-    assert(bytes < BytesCap)
-  }
-
   test("stream-stream attribution join: state rows = buffered rows in the horizon") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -271,44 +194,4 @@ class StreamingStateSpec extends AnyFunSuite {
     assert(bytes < BytesCap)
   }
 
-  test("cusum ingest: state rows = live keys (two longs each, constant per key)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long)]
-    val q = StreamingOps.cusumIngest(
-        input.toDF().toDF("key", "seq", "v"), mum = 1000000L, sm = 500000L)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("ss_cusum").start()
-    // 90 observations over 3 keys = 3 live CUSUM registers
-    input.addData((0 until 90).map(i =>
-      (s"k${i % 3}", i.toLong, (i % 7).toLong)): _*)
-    q.processAllAvailable()
-    val (rows, bytes) = stateOf(q)
-    q.stop()
-    report("cusumIngest", rows, bytes)
-    assert(rows == 3L, s"state must be one row per live key (3), got $rows")
-    assert(bytes < BytesCap)
-  }
-
-  test("cross-source contamination ingest: state rows = distinct hashes " +
-      "(one long each), NOT arrivals") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String, String, Long)]
-    val q = StreamingOps.crossSourceContamIngest(
-        input.toDF().toDF("doc_id", "source", "text", "seq"),
-        Map("a" -> 0, "b" -> 1, "c" -> 2))
-      .writeStream.outputMode("update")
-      .format("memory").queryName("ss_contam").start()
-    // 120 arrivals over 3 sources but only 10 distinct texts: state is
-    // the per-HASH mask (10 rows), constant however often a hash recurs
-    input.addData((0 until 120).map(i =>
-      (i.toLong, s"${('a' + i % 3).toChar}", s"text-${i % 10}", i.toLong)): _*)
-    q.processAllAvailable()
-    val (rows, bytes) = stateOf(q)
-    q.stop()
-    report("crossSourceContamIngest", rows, bytes)
-    assert(rows == 10L, s"state must be one row per distinct hash (10), got $rows")
-    assert(bytes < BytesCap)
-  }
 }
