@@ -10,19 +10,24 @@ import graft.sources.Sources
  * The full EXstream explanation pipeline (SURVEY.md §3):
  * `construct_explanations` / `get_explanatory_features`
  * (`/root/reference/script_1.py:34-95,118-184`) re-expressed as lazy Spark
- * plans over the long observation table.
+ * plans over the trace rows.
  *
- * Stage shape (§3.4): scan -> broadcast interval join (no shuffle) ->
- * groupBy(window, feature) shuffle for match counts + rewards ->
- * window-function leap cutoff -> collect_list per window. All heavy work
- * is executor-side and embarrassingly parallel across (window x feature);
- * the only driver-side data are the k x k correlation matrix and the final
- * explanation rows.
+ * Stage shape (§3.4) of [[constructExplanations]]: wide scan (schema from
+ * each file's header, no inference job) -> broadcast interval join of the
+ * WIDE rows (no shuffle) -> checkpoint -> resample explode + md5 sample
+ * per wide row -> wide moments: one array aggregate per resample, the
+ * k x k correlation step's only job -> melt to long rows with each
+ * trace's own columns -> groupBy(window, feature) shuffle for match
+ * counts + rewards -> window-function leap cutoff -> collect_list per
+ * window. All heavy work is executor-side and embarrassingly parallel
+ * across (window x feature); the only driver-side data are the per-resample
+ * moment arrays and the final explanation rows.
  *
  * Steps 1-3 (correlation dedup -> FP filter -> reward + leap cutoff) are
- * composed once, in `explainByRs`: [[explanatoryFeatures]] runs it on the
- * full data alone, [[constructExplanations]] on the full data plus every
- * instability resample in one plan.
+ * composed once, in `explainByRs`, which takes the wide rows for step 1
+ * and the long rows for steps 2-3: [[explanatoryFeatures]] runs it on the
+ * full data alone (wide rows from [[pivotWide]]), [[constructExplanations]]
+ * on the full data plus every instability resample in one plan.
  */
 object ExstreamPipeline {
 
@@ -43,7 +48,8 @@ object ExstreamPipeline {
       obs: DataFrame,
       featureOrder: Seq[String],
       cfg: ExstreamConfig): DataFrame =
-    explainByRs(obs.withColumn("rs", lit(-1)), featureOrder, cfg, Seq(-1))
+    explainByRs(pivotWide(obs, featureOrder).withColumn("rs", lit(-1)),
+      obs.withColumn("rs", lit(-1)), featureOrder, cfg, Seq(-1))
       .select("window_key", "features")
 
   /** The resample id folded into a window key: `"<rs>#<key>"`, so every
@@ -64,11 +70,14 @@ object ExstreamPipeline {
    * The resample id is folded into the window key ([[rsKey]]), so all
    * instances ride the SAME shuffles instead of one plan execution each.
    *
-   * @param obs      observation table carrying an int `rs` column
+   * @param wide     wide rows of `obs` (one nullable column per feature)
+   *                 carrying the same int `rs` column: step 1's input
+   * @param obs      long observation table carrying an int `rs` column
    * @param rsValues every `rs` value `obs` may hold (-1 = full data)
    * @return `(rs, window_key, features: array<string>)`
    */
   private def explainByRs(
+      wide: DataFrame,
       obs: DataFrame,
       featureOrder: Seq[String],
       cfg: ExstreamConfig,
@@ -78,11 +87,9 @@ object ExstreamPipeline {
     // step 1, per rs: correlation-cluster feature dedup — the reference
     // re-runs get_explanatory_features (clustering included) on each
     // resample (`script_1.py:213-222`), so feature selection is per-rs;
-    // all moment rows come from ONE aggregation pass.
+    // all moment arrays come from ONE aggregation pass over the wide rows.
     val obsSel =
       if (cfg.cluster && featureOrder.size > 1) {
-        val wide = folded.groupBy("rs", "window_key", "timestamp", "type_data")
-          .pivot("feature", featureOrder).agg(first("value"))
         val selByRs = CorrelationFilter.selectFeaturesBy(
           wide, featureOrder, cfg.correlationThreshold, "rs")
         val keep = rsValues.map { r =>
@@ -124,7 +131,8 @@ object ExstreamPipeline {
 
   /** Pivot the long observation table back to wide (one row per
     * (window, timestamp, type_data)) — the input of
-    * `FeatureImportance.randomForestImportances`. */
+    * `FeatureImportance.randomForestImportances` and [[explanatoryFeatures]]'
+    * correlation step. */
   def pivotWide(obs: DataFrame, featureOrder: Seq[String]): DataFrame =
     obs.groupBy("window_key", "timestamp", "type_data")
       .pivot("feature", featureOrder)
@@ -143,10 +151,10 @@ object ExstreamPipeline {
       dataFolder: String,
       labelFilename: String,
       cfg: ExstreamConfig): DataFrame = {
-    val (traceLong, featureOrder) = Sources.readAllTraces(spark, dataFolder, labelFilename)
+    val (traces, featureOrder) = Sources.readTracesWide(spark, dataFolder, labelFilename)
     val labels = Sources.readLabels(spark, s"$dataFolder/$labelFilename.csv")
       .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
-    val obs0 = IntervalLabeler.labelObservations(traceLong, labels)
+    val wide0 = IntervalLabeler.labelObservations(Sources.unionWide(traces), labels)
 
     // instability: the explanation query re-run on N 80% resamples
     // (`script_1.py:227-241`). The resample id `rs` (-1 = full data,
@@ -154,13 +162,15 @@ object ExstreamPipeline {
     // so ALL N+1 pipeline instances ride the SAME shuffles — correlation
     // moments, FP patterns/series, rewards, leap — instead of N+1 serial
     // plan executions (~(N+1)x the shuffled bytes, zero extra stages; q38's
-    // proven shape). Sampling is a deterministic md5 hash of the WIDE-row
-    // key — the reference samples whole wide rows, i.e. every feature of a
-    // (window, class, timestamp) jointly (`script_1.py:228-230`) — kept
-    // iff the 16-bit md5 prefix is under round(cfg.sampleFraction*65536)
-    // (exact to 1/65536), seeded via cfg.seed.
-    // checkpoint the 1x observation table, NOT the (rounds+1)x exploded
-    // view: the explode + md5 filter is a narrow, cheap projection
+    // proven shape). Sampling is a deterministic md5 hash of the wide-row
+    // key, applied to the WIDE rows — the reference samples whole wide
+    // rows, i.e. every feature of a (window, class, timestamp) jointly
+    // (`script_1.py:228-230`) — kept iff the 16-bit md5 prefix is under
+    // round(cfg.sampleFraction*65536) (exact to 1/65536), seeded via
+    // cfg.seed. The correlation moments read the sampled wide rows; the
+    // melt to long rows, with each trace's own columns, comes after.
+    // checkpoint the 1x labeled wide table, NOT the (rounds+1)x exploded
+    // view: the explode + md5 filter + melt is a narrow, cheap projection
     // recomputed per consuming subtree, while materializing after the
     // explode would pin ~6x the observation bytes — the difference
     // between "fits in cluster memory" and "doesn't" at full scale.
@@ -173,10 +183,10 @@ object ExstreamPipeline {
       if (cfg.sampleFraction >= 1.0) lit(true)
       else md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
         col("timestamp"), col("rs")).cast("binary")) < sampleCutoffHex(cfg.sampleFraction)
-    val obs = obs0.ckptLazy
+    val wide = wide0.ckptLazy
       .withColumn("rs", explode(array(rsValues.map(lit(_)): _*)))
       .where(col("rs") === -1 || sampled)
-    val expl = explainByRs(obs, featureOrder, cfg, rsValues)
+    val expl = explainByRs(wide, Sources.meltTraces(wide, traces), featureOrder, cfg, rsValues)
     val featIdx = featureOrder.zipWithIndex.toMap
 
     val main = expl.where(col("rs") === -1).select("window_key", "features")

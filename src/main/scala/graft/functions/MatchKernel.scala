@@ -86,7 +86,8 @@ object MatchKernel {
 
   /**
    * Greedy best-first match selection with exclusion-zone suppression:
-   * accept candidates in ascending distance order while dist <= maxDistance,
+   * accept candidates in ascending (distance, offset) order while
+   * dist <= maxDistance,
    * suppressing any candidate within +/- ceil(m/4) of an accepted match —
    * stumpy.match's documented behavior with its default exclusion zone.
    *
@@ -97,15 +98,22 @@ object MatchKernel {
     if (d.isEmpty) return Seq.empty
     val m = q.length
     val excl = math.ceil(m / 4.0).toInt
-    val order = Array.range(0, d.length).sortBy(i => (d(i), i))
+    // only offsets with d <= maxDistance can be accepted: sort just those
+    // by (distance, offset). The scan stops at the first distance above
+    // the threshold, so a NaN distance (sorted last) is reached only when
+    // no distance is above it.
+    var above = false
+    var i = 0
+    while (i < d.length) { if (d(i) > maxDistance) above = true; i += 1 }
+    val order = Array.range(0, d.length)
+      .filter(i => d(i) <= maxDistance || (!above && d(i).isNaN))
+      .sortBy(i => (d(i), i))
     val suppressed = new Array[Boolean](d.length)
     val acc = Seq.newBuilder[(Double, Int)]
     var oi = 0
-    var done = false
-    while (oi < order.length && !done) {
+    while (oi < order.length) {
       val idx = order(oi)
-      if (d(idx) > maxDistance) done = true
-      else if (!suppressed(idx)) {
+      if (!suppressed(idx)) {
         acc += ((d(idx), idx))
         var k = math.max(0, idx - excl)
         val hi = math.min(d.length - 1, idx + excl)

@@ -306,15 +306,17 @@ object Dedup {
       pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
       maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
     val spark = pairs.sparkSession
+    // a pair with a null endpoint is no edge: dropped before every branch,
+    // so the driver union-find (which reads primitive longs), the
+    // above-gate distributed loop and the gate-disabled loop see the same
+    // edge set
     val fwd = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull)
     val longKeys = fwd.schema.fields
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
     if (!longKeys || maxDriverEdges <= 0L)
-      return dupClustersWithRounds(pairs, aCol, bCol)._1
-    // a pair with a null endpoint is no edge: dropped here, so the driver
-    // union-find (which reads primitive longs) and the above-gate
-    // distributed loop see the same edge set
-    val uniq = fwd.where(col("a").isNotNull && col("b").isNotNull).distinct()
+      return dupClustersWithRounds(fwd, "a", "b")._1
+    val uniq = fwd.distinct()
       .ckptLazy // consumers: gate count + (driver collect | distributed rounds)
     val m = uniq.count() // materializes the checkpoint
     if (m > maxDriverEdges)

@@ -23,32 +23,35 @@ import org.apache.spark.sql.functions._
 object IntervalLabeler {
 
   /**
-   * @param traceLong long trace observations `(trace_id, timestamp, feature, value)`
+   * @param traces    trace rows keyed by `(trace_id, timestamp)`: long
+   *                  observations `(trace_id, timestamp, feature, value)`
+   *                  or wide rows `(trace_id, timestamp, <metrics>)`
    * @param labels    label spans `(label_row, trace_id, ano_id, ref_start,
    *                  ref_end, ano_start, ano_end, ano_type)`
    * @return observation table `(window_key, trace_id, ano_id, ano_type,
-   *         timestamp, type_data, feature, value)`
+   *         timestamp, type_data, <the other trace columns>)` — for long
+   *         input `(…, type_data, feature, value)`
    */
-  def labelObservations(traceLong: DataFrame, labels: DataFrame): DataFrame = {
+  def labelObservations(traces: DataFrame, labels: DataFrame): DataFrame = {
     val l = broadcast(labels)
+    val carried = traces.columns.toSeq.filterNot(Set("trace_id", "timestamp"))
+      .map(c => traces.col("`" + c.replace("`", "``") + "`"))
 
     def side(startCol: String, endCol: String, closedEnd: Boolean, cls: Int): DataFrame = {
       val endPred =
-        if (closedEnd) traceLong("timestamp") <= l(endCol)
-        else traceLong("timestamp") < l(endCol)
-      traceLong
+        if (closedEnd) traces("timestamp") <= l(endCol)
+        else traces("timestamp") < l(endCol)
+      traces
         .join(l,
-          traceLong("trace_id") === l("trace_id") &&
-            traceLong("timestamp") >= l(startCol) && endPred)
-        .select(
+          traces("trace_id") === l("trace_id") &&
+            traces("timestamp") >= l(startCol) && endPred)
+        .select(Seq(
           concat_ws("_", l("ano_type"), l("trace_id"), l("label_row")).as("window_key"),
-          traceLong("trace_id"),
+          traces("trace_id"),
           l("ano_id"),
           l("ano_type"),
-          traceLong("timestamp"),
-          lit(cls).as("type_data"),
-          traceLong("feature"),
-          traceLong("value"))
+          traces("timestamp"),
+          lit(cls).as("type_data")) ++ carried: _*)
     }
 
     side("ref_start", "ref_end", closedEnd = false, cls = 0)

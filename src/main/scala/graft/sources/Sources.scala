@@ -1,6 +1,8 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,10 +12,13 @@ import org.apache.spark.sql.types._
  * The reference reads one CSV per trace with pandas and discovers metric
  * columns from the header (`/root/reference/utils/get_data.py:19-20,77`).
  * Trace schemas are dynamic (8- vs 12-column variants,
- * `explore_data.ipynb` cells 2/9), so traces are read per-file and
- * normalized to LONG format before the union — schema drift between traces
- * then cannot break the plan, and every downstream operator works on the
- * same narrow shape. Each per-file read is still a distributed scan; with
+ * `explore_data.ipynb` cells 2/9), so each trace is read per-file with the
+ * schema its own header line declares — read on the driver, no
+ * schema-inference scan. The wide frames union by name, a column a trace
+ * lacks being null on its rows, and the melt to LONG format uses each
+ * trace's own column set ([[meltTraces]]), so schema drift between traces
+ * cannot break the plan or invent observations: the long rows are exactly
+ * the per-file melts. Each per-file read is still a distributed scan; with
  * thousands of trace files one would instead group files by schema
  * fingerprint and batch the reads, which keeps driver-side work O(#schemas).
  */
@@ -29,12 +34,21 @@ object Sources {
     StructField("ano_end", LongType),
     StructField("ano_type", StringType)))
 
-  /** S2: labels.csv — header + unnamed index column (`get_data.py:20`). */
-  def readLabels(spark: SparkSession, path: String): DataFrame =
+  /** S2: labels.csv — header + unnamed index column (`get_data.py:20`).
+    * The reader schema takes [[labelSchema]]'s types under the file's own
+    * header names (the index column's is empty), so Spark's header check
+    * passes; the columns are then renamed to [[labelSchema]]'s names. */
+  def readLabels(spark: SparkSession, path: String): DataFrame = {
+    val header = headerCells(spark, path)
+    require(header.size == labelSchema.size,
+      s"label file $path has ${header.size} header cells, expected ${labelSchema.size}: " +
+        labelSchema.fieldNames.mkString(", "))
     spark.read
       .option("header", "true")
-      .schema(labelSchema)
+      .schema(StructType(header.zip(labelSchema).map { case (h, f) => f.copy(name = h) }))
       .csv(path)
+      .toDF(labelSchema.fieldNames.toIndexedSeq: _*)
+  }
 
   /** Filename-prefix -> anomaly type (`get_data.py:26-53`). JVM-side
     * definition, pinned by the Sources unit tests; the pipeline uses the
@@ -67,45 +81,106 @@ object Sources {
       .sorted // reference uses os.listdir order (nondeterministic); we canonicalize
   }
 
-  /**
-   * S3+S4: read ONE trace CSV (first unnamed column = integer timestamp,
-   * `get_data.py:77-79`) and melt it to long format
-   * `(trace_id, timestamp, feature, value)`. Metric columns are whatever
-   * the header declares — discovered at read time.
-   */
-  def readTraceLong(spark: SparkSession, dataFolder: String, traceId: String): DataFrame = {
-    val wide = spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(s"$dataFolder/$traceId.csv")
-    val tsCol = wide.columns.head // unnamed index column, pandas' index_col=0
-    val metricCols = wide.columns.tail
-    meltTrace(wide, tsCol, metricCols.toIndexedSeq).withColumn("trace_id", lit(traceId))
+  /** The header cells of a CSV file, read on the driver through the
+    * Hadoop FS (no Spark job) and tokenized with Spark's own CSV parser
+    * settings, so the cells are exactly the names `CSVHeaderChecker`
+    * compares a reader schema against. */
+  def headerCells(spark: SparkSession, file: String): IndexedSeq[String] = {
+    val path = new org.apache.hadoop.fs.Path(file)
+    val in = path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path)
+    val line =
+      try new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8")).readLine()
+      finally in.close()
+    require(line != null, s"CSV file $file is empty: no header line")
+    val settings = new CSVOptions(Map("header" -> "true"), false,
+      spark.sessionState.conf.sessionLocalTimeZone).asParserSettings
+    val cells = Option(new CsvParser(settings).parseLine(line)).getOrElse(Array.empty[String])
+    require(cells.nonEmpty, s"CSV file $file has an empty header line")
+    cells.toIndexedSeq.map(c => if (c == null) "" else c)
   }
 
-  /** Melt a wide trace frame using one `stack` generator (single projection,
-    * no shuffle; stays inside whole-stage codegen). */
-  def meltTrace(wide: DataFrame, tsCol: String, metricCols: Seq[String]): DataFrame = {
+  /** `name` as a SQL identifier. */
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+
+  /** One trace file read wide: `frame` is `(timestamp, <metrics>,
+    * trace_id)`, `metrics` its metric columns in header order. */
+  case class WideTrace(id: String, frame: DataFrame, metrics: Seq[String])
+
+  /**
+   * S3: read ONE trace CSV wide, with the schema its own header declares
+   * (`get_data.py:77-79`): the first (unnamed index) column is the integer
+   * timestamp, every other column a double metric. Field names equal the
+   * header cells, and `FAILFAST` turns a malformed cell into an error that
+   * names the file; an empty cell is a null value.
+   */
+  def readTraceWide(spark: SparkSession, dataFolder: String, traceId: String): WideTrace = {
+    val file = s"$dataFolder/$traceId.csv"
+    val header = headerCells(spark, file)
+    val schema = StructType(
+      StructField(header.head, LongType) +: header.tail.map(StructField(_, DoubleType)))
+    val frame = spark.read
+      .option("header", "true")
+      .option("mode", "FAILFAST")
+      .schema(schema)
+      .csv(file)
+      .toDF(("timestamp" +: header.tail): _*)
+      .withColumn("trace_id", lit(traceId))
+    WideTrace(traceId, frame, header.tail)
+  }
+
+  /** S4: melt a wide frame to long rows `(<other columns>, feature, value)`
+    * with one `stack` generator (single projection, no shuffle; stays
+    * inside whole-stage codegen). Every column not in `metricCols` is
+    * carried. */
+  def meltTrace(wide: DataFrame, metricCols: Seq[String]): DataFrame = {
+    val metrics = metricCols.toSet
     val stackArgs = metricCols
-      .map(c => s"'$c', cast(`$c` as double)")
+      .map(c => s"'${c.replace("'", "\\'")}', ${quoted(c)}")
       .mkString(", ")
     wide.selectExpr(
-      s"cast(`$tsCol` as long) as timestamp",
-      s"stack(${metricCols.size}, $stackArgs) as (feature, value)")
+      wide.columns.filterNot(metrics).map(quoted).toIndexedSeq :+
+        s"stack(${metricCols.size}, $stackArgs) as (feature, value)": _*)
   }
 
-  /** All traces of a folder, melted and unioned, with the filename-derived
-    * anomaly type (`get_data.py:71`). Also returns the per-trace metric
-    * column order (feature insertion order drives reward tie-breaking). */
-  def readAllTraces(spark: SparkSession, dataFolder: String, labelFilename: String)
-      : (DataFrame, Seq[String]) = {
+  /** Every trace of a folder read wide ([[readTraceWide]]), plus the
+    * feature order: the header order of the first trace (reference:
+    * columns of the concat'd frame, i.e. first file read; feature
+    * insertion order drives reward tie-breaking). */
+  def readTracesWide(spark: SparkSession, dataFolder: String, labelFilename: String)
+      : (Seq[WideTrace], Seq[String]) = {
     val ids = listTraceIds(spark, dataFolder, labelFilename)
     require(ids.nonEmpty, s"no trace CSVs under $dataFolder")
-    // feature order: header order of the first trace (reference: columns of
-    // the concat'd frame, i.e. first file read)
-    val head = spark.read.option("header", "true").csv(s"$dataFolder/${ids.head}.csv")
-    val featureOrder = head.columns.tail.toIndexedSeq
-    val union = ids.map(readTraceLong(spark, dataFolder, _)).reduce(_ unionByName _)
-    (union, featureOrder)
+    val traces = ids.map(readTraceWide(spark, dataFolder, _))
+    (traces, traces.head.metrics)
+  }
+
+  /** All traces of a folder, each read wide and melted with its own
+    * columns to long `(timestamp, feature, value, trace_id)`, and unioned.
+    * Also returns the feature order (see [[readTracesWide]]). */
+  def readAllTraces(spark: SparkSession, dataFolder: String, labelFilename: String)
+      : (DataFrame, Seq[String]) = {
+    val (traces, featureOrder) = readTracesWide(spark, dataFolder, labelFilename)
+    val long = traces.map(t =>
+      meltTrace(t.frame, t.metrics).select("timestamp", "feature", "value", "trace_id"))
+    (long.reduce(_ unionByName _), featureOrder)
+  }
+
+  /** The traces' wide frames as one frame, unioned by name: a column a
+    * trace lacks is null on its rows ([[meltTraces]] drops those again). */
+  def unionWide(traces: Seq[WideTrace]): DataFrame =
+    traces.map(_.frame).reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** Melt a frame of several traces' wide rows (e.g. [[unionWide]]
+    * output, labeled) to exactly the long rows each trace's own
+    * [[meltTrace]] gives: a column a trace lacks yields no rows for that
+    * trace, an empty cell a null value. One filter term per distinct
+    * column set, none when every trace has the same columns. */
+  def meltTraces(wide: DataFrame, traces: Seq[WideTrace]): DataFrame = {
+    val long = meltTrace(wide, traces.flatMap(_.metrics).distinct)
+    val bySchema = traces.groupBy(_.metrics.toSet).toSeq
+    if (bySchema.size == 1) long
+    else long.where(bySchema.map { case (cols, ts) =>
+      col("trace_id").isin(ts.map(_.id): _*) && col("feature").isin(cols.toSeq: _*)
+    }.reduce(_ || _))
   }
 }

@@ -68,14 +68,17 @@ class DedupSizedSpec extends AnyFunSuite {
   test("null endpoints are dropped identically below and above the gate") {
     import spark.implicits._
     // nullable long columns: a pair with a null endpoint is no edge on
-    // either branch (node 3 and node 9 only ever pair with a null)
+    // any branch, the gate-disabled one included (node 3 and node 9 only
+    // ever pair with a null)
     val df = Seq[(Option[Long], Option[Long])](
       (Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)),
       (None, None), (Some(5L), Some(6L)), (Some(9L), None))
       .toDF("doc_a", "doc_b")
     val driver = labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 1L << 20))
     val distributed = labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 1L))
+    val gateOff = labelsOf(Dedup.dupClustersSized(df, maxDriverEdges = 0L))
     assert(driver == distributed, s"driver $driver != distributed $distributed")
+    assert(gateOff == driver, s"gate disabled $gateOff != driver $driver")
     assert(driver == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 

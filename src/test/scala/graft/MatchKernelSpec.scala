@@ -64,6 +64,31 @@ class MatchKernelSpec extends AnyFunSuite {
       case _ =>
     }
     assert(ms.size >= 4) // ~5 periods present
+
+    // tied distances: a constant pattern scores exactly 0.0 on every
+    // constant window and exactly sqrt(m) on every window holding a spike,
+    // so ties break by offset. The selection must equal the definition —
+    // the whole profile sorted by (distance, offset), scanned until the
+    // first distance above the threshold.
+    def byDefinition(q: Array[Double], t: Array[Double], maxD: Double): Seq[(Double, Int)] = {
+      val d = MatchKernel.distanceProfile(q, t)
+      val excl = math.ceil(q.length / 4.0).toInt
+      val suppressed = new Array[Boolean](d.length)
+      Array.range(0, d.length).sortBy(i => (d(i), i)).iterator
+        .takeWhile(i => !(d(i) > maxD))
+        .filter(i => !suppressed(i))
+        .map { i =>
+          (math.max(0, i - excl) to math.min(d.length - 1, i + excl)).foreach(suppressed(_) = true)
+          (d(i), i)
+        }.toSeq
+    }
+    val cq = Array.fill(5)(3.0)
+    val spiky = Array.tabulate(40)(i => if (i % 13 == 6) 9.0 else 1.0)
+    for (maxD <- Seq(0.0, 1.0, math.sqrt(5.0), 10.0); (pq, pt) <- Seq((cq, spiky), (q, t))) {
+      val got = MatchKernel.matches(pq, pt, maxD)
+      assert(got == byDefinition(pq, pt, maxD), s"maxDistance $maxD: $got")
+    }
+    assert(MatchKernel.matches(cq, spiky, 0.0).map(_._2) == Seq(0, 7, 10, 13, 20, 23, 26, 33))
   }
 
   test("constant-window conventions: const/const -> 0, one-sided const -> sqrt(m)") {

@@ -246,4 +246,108 @@ class PipelineSpec extends AnyFunSuite {
     assert(cachedFragments() == before,
       "constructExplanations leaked an InMemoryRelation into the catalog cache")
   }
+
+  /** Write a trace folder: `files` maps trace id -> (header columns, rows
+    * of cells, timestamp first), plus a two-window labels file. */
+  private def writeFolder(files: Seq[(String, Seq[String], Seq[Seq[String]])]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("pipeline-spec-drift")
+    dir.toFile.deleteOnExit()
+    def write(name: String, lines: Seq[String]): Unit = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      f.toFile.deleteOnExit()
+    }
+    files.foreach { case (id, cols, rows) =>
+      write(s"$id.csv", ("" +: cols).mkString(",") +: rows.map(_.mkString(",")))
+    }
+    write("labels.csv", Seq(",trace_id,ano_id,ref_start,ref_end,ano_start,ano_end,ano_type",
+      "0,1_1,0,0,150,200,260,x", "1,2_1,0,0,150,200,260,x"))
+    dir.toString
+  }
+
+  /** Two traces with schema drift: 2_1 lacks 1_1's f_c and adds f_e, and
+    * 1_1 has one empty cell (f_c at t=210). f_b is f_a's correlated twin,
+    * f_d is periodic; f_a and f_e shift inside the anomaly span. */
+  private lazy val driftFiles = {
+    val rnd = new scala.util.Random(7)
+    def rows(cols: Seq[String]) = (0 until 300).map { ts =>
+      val ano = ts >= 200 && ts <= 260
+      val a = rnd.nextGaussian() + (if (ano) 6.0 else 0.0)
+      ts.toString +: cols.map {
+        case "f_a" => a
+        case "f_b" => 2 * a + 0.01 * rnd.nextGaussian()
+        case "f_c" => 3 * rnd.nextGaussian()
+        case "f_d" => 4 * math.sin(ts * 2 * math.Pi / 25) + 0.1 * rnd.nextGaussian()
+        case "f_e" => rnd.nextGaussian() + (if (ano) 3.0 else 0.0)
+      }.map(v => f"$v%.6f")
+    }
+    val colsA = Seq("f_a", "f_b", "f_c", "f_d")
+    val rowsA = rows(colsA).map(r => if (r.head == "210") r.updated(3, "") else r)
+    val colsB = Seq("f_a", "f_b", "f_d", "f_e")
+    Seq(("1_1", colsA, rowsA), ("2_1", colsB, rows(colsB)))
+  }
+
+  test("schema drift and empty cells: constructExplanations equals explanatoryFeatures " +
+      "over readAllTraces on all four configs; a malformed cell fails naming its file") {
+    import org.apache.spark.sql.functions.col
+    val dir = writeFolder(driftFiles)
+    val (traceLong, featureOrder) = Sources.readAllTraces(spark, dir, "labels")
+    assert(featureOrder == Seq("f_a", "f_b", "f_c", "f_d"))
+    val labels = Sources.readLabels(spark, s"$dir/labels.csv")
+      .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
+    val obs = IntervalLabeler.labelObservations(traceLong, labels).cache()
+    // the long rows are each file's own melt: no f_c rows for 2_1, no f_e
+    // rows for 1_1, and the empty cell is one null value
+    assert(traceLong.where(col("trace_id") === "2_1" && col("feature") === "f_c").count() == 0)
+    assert(traceLong.where(col("trace_id") === "1_1" && col("feature") === "f_e").count() == 0)
+    assert(traceLong.where(col("value").isNull).collect().map(r =>
+      (r.getAs[String]("trace_id"), r.getAs[Long]("timestamp"), r.getAs[String]("feature"))).toSeq ==
+      Seq(("1_1", 210L, "f_c")))
+    val featIdx = featureOrder.zipWithIndex.toMap
+    val keyOf = Map(("1_1", 0L) -> "bursty input_1_1_0", ("2_1", 0L) -> "stalled input_2_1_1")
+    for (cluster <- Seq(false, true); fp <- Seq(false, true)) {
+      val cfg = ExstreamConfig(cluster = cluster, falsePositiveFiltering = fp,
+        maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
+      val want = ExstreamPipeline.explanatoryFeatures(obs, featureOrder, cfg).collect()
+        .map(r => r.getString(0) -> r.getSeq[String](1).map(featIdx.getOrElse(_, -1))).toMap
+      val got = ExstreamPipeline.constructExplanations(spark, dir, "labels", cfg).collect()
+        .map(r => keyOf((r.getString(0), r.getLong(1))) -> r.getSeq[Int](2)).toMap
+      assert(got == want, s"cluster=$cluster fp=$fp")
+      assert(got.values.forall(_.nonEmpty), s"cluster=$cluster fp=$fp: $got")
+    }
+    obs.unpersist()
+
+    val bad = writeFolder(driftFiles :+ (("3_1", Seq("f_a"), Seq(Seq("0", "1.5"), Seq("1", "abc")))))
+    val err = intercept[Exception] {
+      ExstreamPipeline.constructExplanations(spark, bad, "labels", ExstreamConfig()).collect()
+    }
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(messages.contains("3_1.csv"), messages)
+  }
+
+  test("constructExplanations plan build runs 4 jobs: no schema inference, no pivot") {
+    // jobs run while the plan is BUILT, before any action: only the
+    // correlation step's moment aggregate, i.e. the interval join's two
+    // label broadcasts (ref and ano spans), the aggregate's shuffle map
+    // stage and its collect. Every file's header is read on the driver,
+    // with no schema-inference scan, and no long -> wide pivot is planned.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cfg = ExstreamConfig(cluster = true, falsePositiveFiltering = true,
+      maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val plan = try {
+      val df = ExstreamPipeline.constructExplanations(spark, fixtureDir, "labels", cfg)
+      org.apache.spark.ListenerBusDrain(sc)
+      df
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 4, s"${jobs.get} jobs during plan build")
+    assert(plan.count() == 4)
+  }
 }
