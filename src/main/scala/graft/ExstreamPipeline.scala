@@ -1,6 +1,7 @@
 package graft
 
 import graft.Ckpt._
+import graft.functions.ExplainKernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
@@ -13,28 +14,33 @@ import graft.sources.Sources
  * plans over the trace rows.
  *
  * Stage shape (§3.4) of [[constructExplanations]]: wide scan (schema from
- * each file's header, no inference job) -> broadcast interval join of the
- * WIDE rows (no shuffle) -> checkpoint -> resample explode + md5 sample
- * per wide row -> wide moments: one array aggregate per resample, the
- * k x k correlation step's only job -> melt to long rows with each
- * trace's own columns -> groupBy(window, feature) shuffle for match
- * counts + rewards -> window-function leap cutoff -> collect_list per
- * window. All heavy work is executor-side and embarrassingly parallel
- * across (window x feature); the only driver-side data are the per-resample
+ * each file's header, no inference job) -> ONE broadcast interval join of
+ * the WIDE rows (no shuffle) -> checkpoint -> resample explode + md5
+ * sample per wide row -> wide moments: one array aggregate per resample,
+ * the k x k correlation step's only job -> the wide rows hash-partitioned
+ * on the resample id `rs` into `defaultParallelism` partitions, one pure
+ * kernel per `rs` group for FP filter, reward and leap cut
+ * ([[graft.functions.ExplainKernel]]) -> instability: collect_list of the
+ * small `(rs, window_key, features)` output, a join back to the labels
+ * and a UDF. Trace rows are never melted to long rows and never shuffled
+ * per (window, feature); the only driver-side data are the per-resample
  * moment arrays and the final explanation rows.
  *
  * Steps 1-3 (correlation dedup -> FP filter -> reward + leap cutoff) are
- * composed once, in `explainByRs`, which takes the wide rows for step 1
- * and the long rows for steps 2-3: [[explanatoryFeatures]] runs it on the
- * full data alone (wide rows from [[pivotWide]]), [[constructExplanations]]
- * on the full data plus every instability resample in one plan.
+ * composed once, in `explainWide`, over wide rows carrying `rs`:
+ * [[explanatoryFeatures]] runs it on the full data alone (wide rows from
+ * [[pivotWide]]), [[constructExplanations]] on the full data plus every
+ * instability resample in one plan. Steps 2-3 of one window are
+ * [[graft.functions.ExplainKernel.explainWindow]], the same function the
+ * online operator (`StreamingOps.explainBuffered`) calls at window close.
  */
 object ExstreamPipeline {
 
   /**
    * The core explanation query (§3.2): given labeled observations, return
    * per window the ranked-and-filtered explanatory feature list — the
-   * single-instance run of [[explainByRs]].
+   * single-instance run of [[explainWide]] over the observations' wide
+   * pivot ([[pivotWide]]).
    *
    * Re-keying is the whole group-level variant (SURVEY §3.3): the notebook
    * computes rewards per ANOMALY TYPE (`testing.ipynb` cells 21-26), which
@@ -47,13 +53,19 @@ object ExstreamPipeline {
   def explanatoryFeatures(
       obs: DataFrame,
       featureOrder: Seq[String],
-      cfg: ExstreamConfig): DataFrame =
-    explainByRs(pivotWide(obs, featureOrder).withColumn("rs", lit(-1)),
-      obs.withColumn("rs", lit(-1)), featureOrder, cfg, Seq(-1))
+      cfg: ExstreamConfig): DataFrame = {
+    val traceHas = obs.groupBy(col("trace_id").cast("string"))
+      .agg(collect_set("feature")).collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap
+    val features = allFeatures(featureOrder, traceHas.values.flatten)
+    explainWide(pivotWide(obs, features).withColumn("rs", lit(-1)),
+      featureOrder, features, traceHas, cfg)
       .select("window_key", "features")
+  }
 
   /** The resample id folded into a window key: `"<rs>#<key>"`, so every
-    * pipeline instance rides the same per-window shuffles. */
+    * resample instance of an events-table explanation query rides the same
+    * per-window shuffles (`Queries.exstreamInstability`). */
   private[graft] def rsKey(key: Column): Column = concat_ws("#", col("rs"), key)
 
   /** Inverse of [[rsKey]] on a frame's `window_key`: splits off `rs` (int)
@@ -64,56 +76,82 @@ object ExstreamPipeline {
       .withColumn("window_key", parts.getItem(1))
   }
 
+  /** The feature order followed by every other column a trace has, by
+    * name: the value slots of [[explainWide]]'s wide rows. */
+  private def allFeatures(featureOrder: Seq[String], columns: Iterable[String]): IndexedSeq[String] =
+    (featureOrder ++ columns.toSeq.distinct.filterNot(featureOrder.toSet).sorted).toIndexedSeq
+
   /**
    * Steps 1-3 of the explanation query — correlation dedup, FP filter,
-   * entropy reward + leap cutoff — for every resample instance at once.
-   * The resample id is folded into the window key ([[rsKey]]), so all
-   * instances ride the SAME shuffles instead of one plan execution each.
+   * entropy reward + leap cutoff — for every resample instance `rs` at
+   * once. Step 1 takes every instance's correlation moments from one
+   * aggregation pass over the wide rows. The wide rows are then
+   * hash-partitioned on `rs` into `defaultParallelism` partitions, and
+   * each `rs` group runs steps 2-3 in one task through
+   * [[graft.functions.ExplainKernel.explainGroup]]: FP series are aligned
+   * on `rs`, so a resampled window only matches against its own
+   * resample's reference series.
    *
-   * @param wide     wide rows of `obs` (one nullable column per feature)
-   *                 carrying the same int `rs` column: step 1's input
-   * @param obs      long observation table carrying an int `rs` column
-   * @param rsValues every `rs` value `obs` may hold (-1 = full data)
+   * @param wide     wide rows `(rs, window_key, trace_id, timestamp,
+   *                 type_data, <features>)`, one nullable column per
+   *                 feature (null = empty cell)
+   * @param features the value columns of `wide`: `featureOrder` first
+   * @param traceHas the feature columns each trace has
    * @return `(rs, window_key, features: array<string>)`
    */
-  private def explainByRs(
+  private def explainWide(
       wide: DataFrame,
-      obs: DataFrame,
       featureOrder: Seq[String],
-      cfg: ExstreamConfig,
-      rsValues: Seq[Int]): DataFrame = {
-    val folded = obs.withColumn("window_key", rsKey(col("window_key")))
+      features: IndexedSeq[String],
+      traceHas: Map[String, Set[String]],
+      cfg: ExstreamConfig): DataFrame = {
+    val spark = wide.sparkSession
+    import spark.implicits._
 
     // step 1, per rs: correlation-cluster feature dedup — the reference
     // re-runs get_explanatory_features (clustering included) on each
     // resample (`script_1.py:213-222`), so feature selection is per-rs;
     // all moment arrays come from ONE aggregation pass over the wide rows.
-    val obsSel =
-      if (cfg.cluster && featureOrder.size > 1) {
-        val selByRs = CorrelationFilter.selectFeaturesBy(
-          wide, featureOrder, cfg.correlationThreshold, "rs")
-        val keep = rsValues.map { r =>
-          col("rs") === r && col("feature").isin(selByRs.getOrElse(r, featureOrder): _*)
-        }.reduce(_ || _)
-        folded.where(keep)
-      } else folded
+    val selByRs: Map[Int, Seq[String]] =
+      if (cfg.cluster && featureOrder.size > 1)
+        CorrelationFilter.selectFeaturesBy(wide, featureOrder, cfg.correlationThreshold, "rs")
+      else Map.empty
 
-    // step 2, per rs: FP filter; series align on rs so a resampled window
-    // only matches against its own resample's reference series
-    val featIdx = featureOrder.zipWithIndex.toMap
-    val obsFiltered =
-      if (cfg.falsePositiveFiltering) {
-        val kept = FalsePositiveFilter.matchCounts(
-          obsSel, featIdx, cfg.maxDistance, cfg.matchCountKeep,
-          cfg.patternFromRefWindow, seriesAlignKeys = Seq("rs"))
-        FalsePositiveFilter.filterObservations(obsSel, kept)
-      } else obsSel
-
-    // step 3: rewards + leap cutoff, all instances through one shuffle
-    val rewards = EntropyReward.rewards(obsFiltered, cfg.applyWorstCase)
-      .withColumn("feat_idx", EntropyReward.featIdxCol(featIdx, col("feature")))
-    unfoldRs(LeapFilter.explanations(rewards)).select("rs", "window_key", "features")
+    // steps 2-3, per rs group: explicit-N repartition (AQE honors a
+    // user-specified count) — each group carries O(n*m) match kernels,
+    // and without the pin AQE packs the few byte-light groups onto ONE
+    // task and runs them serially
+    val k = features.size
+    wide.select(Seq(col("rs").cast("int"), col("window_key").cast("string"),
+        col("trace_id").cast("string"), col("timestamp").cast("long"),
+        col("type_data").cast("int")) ++
+        features.map(f => col(quoted(f)).cast("double")): _*)
+      .repartition(spark.sparkContext.defaultParallelism, col("rs"))
+      .mapPartitions { it =>
+        val groups = scala.collection.mutable.LinkedHashMap[Int, ExplainKernel.WideRows]()
+        val v = new Array[Double](k)
+        val empty = new Array[Boolean](k)
+        it.foreach { r =>
+          var j = 0
+          while (j < k) {
+            empty(j) = r.isNullAt(5 + j)
+            v(j) = if (empty(j)) 0.0 else r.getDouble(5 + j)
+            j += 1
+          }
+          groups.getOrElseUpdate(r.getInt(0), new ExplainKernel.WideRows(k))
+            .add(r.getString(1), r.getString(2), r.getLong(3), r.getInt(4), v, empty)
+        }
+        groups.iterator.flatMap { case (rs, rows) =>
+          val selected = selByRs.getOrElse(rs, features).toSet
+          ExplainKernel.explainGroup(rows, features, traceHas, selected, cfg)
+            .map { case (w, f) => (rs, w, f) }
+        }
+      }
+      .toDF("rs", "window_key", "features")
   }
+
+  /** `name` as a column reference. */
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
 
   /** 16-bit md5-prefix cutoff for a given sample fraction: a 32-hex-char
     * md5 compares lexicographically below the 4-hex-char cutoff iff its
@@ -130,11 +168,11 @@ object ExstreamPipeline {
   }
 
   /** Pivot the long observation table back to wide (one row per
-    * (window, timestamp, type_data)) — the input of
-    * `FeatureImportance.randomForestImportances` and [[explanatoryFeatures]]'
-    * correlation step. */
+    * (window, trace, timestamp, type_data)) — the input of
+    * `FeatureImportance.randomForestImportances` and of
+    * [[explanatoryFeatures]]. */
   def pivotWide(obs: DataFrame, featureOrder: Seq[String]): DataFrame =
-    obs.groupBy("window_key", "timestamp", "type_data")
+    obs.groupBy("window_key", "trace_id", "timestamp", "type_data")
       .pivot("feature", featureOrder)
       .agg(first("value"))
 
@@ -151,42 +189,7 @@ object ExstreamPipeline {
       dataFolder: String,
       labelFilename: String,
       cfg: ExstreamConfig): DataFrame = {
-    val (traces, featureOrder) = Sources.readTracesWide(spark, dataFolder, labelFilename)
-    val labels = Sources.readLabels(spark, s"$dataFolder/$labelFilename.csv")
-      .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
-    val wide0 = IntervalLabeler.labelObservations(Sources.unionWide(traces), labels)
-
-    // instability: the explanation query re-run on N 80% resamples
-    // (`script_1.py:227-241`). The resample id `rs` (-1 = full data,
-    // 0..N-1 = samples) is folded into the window key by `explainByRs`,
-    // so ALL N+1 pipeline instances ride the SAME shuffles — correlation
-    // moments, FP patterns/series, rewards, leap — instead of N+1 serial
-    // plan executions (~(N+1)x the shuffled bytes, zero extra stages; q38's
-    // proven shape). Sampling is a deterministic md5 hash of the wide-row
-    // key, applied to the WIDE rows — the reference samples whole wide
-    // rows, i.e. every feature of a (window, class, timestamp) jointly
-    // (`script_1.py:228-230`) — kept iff the 16-bit md5 prefix is under
-    // round(cfg.sampleFraction*65536) (exact to 1/65536), seeded via
-    // cfg.seed. The correlation moments read the sampled wide rows; the
-    // melt to long rows, with each trace's own columns, comes after.
-    // checkpoint the 1x labeled wide table, NOT the (rounds+1)x exploded
-    // view: the explode + md5 filter + melt is a narrow, cheap projection
-    // recomputed per consuming subtree, while materializing after the
-    // explode would pin ~6x the observation bytes — the difference
-    // between "fits in cluster memory" and "doesn't" at full scale.
-    // localCheckpoint (owned lifecycle), not cache(): blocks stay out of
-    // the catalog cache and the ContextCleaner frees them when the plan
-    // drops, so repeated constructExplanations calls in a long-lived
-    // session don't accumulate InMemoryRelations.
-    val rsValues = -1 until cfg.instabilityRounds
-    val sampled =
-      if (cfg.sampleFraction >= 1.0) lit(true)
-      else md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
-        col("timestamp"), col("rs")).cast("binary")) < sampleCutoffHex(cfg.sampleFraction)
-    val wide = wide0.ckptLazy
-      .withColumn("rs", explode(array(rsValues.map(lit(_)): _*)))
-      .where(col("rs") === -1 || sampled)
-    val expl = explainByRs(wide, Sources.meltTraces(wide, traces), featureOrder, cfg, rsValues)
+    val (expl, labels, featureOrder) = explainFolder(spark, dataFolder, labelFilename, cfg)
     val featIdx = featureOrder.zipWithIndex.toMap
 
     val main = expl.where(col("rs") === -1).select("window_key", "features")
@@ -212,5 +215,54 @@ object ExstreamPipeline {
       .withColumn("exp_size", size(col("explanation")))
       .withColumn("exp_instability", instabilityUdf(col("exps")))
       .select("trace_id", "ano_id", "explanation", "exp_size", "exp_instability")
+  }
+
+  /** [[constructExplanations]] up to the explanation of every window in
+    * every resample instance, before the instability tail.
+    *
+    * @return `((rs, window_key, features: array<string>), labels with
+    *         ano_type, feature order)` */
+  private[graft] def explainFolder(
+      spark: SparkSession,
+      dataFolder: String,
+      labelFilename: String,
+      cfg: ExstreamConfig): (DataFrame, DataFrame, Seq[String]) = {
+    val (traces, featureOrder) = Sources.readTracesWide(spark, dataFolder, labelFilename)
+    val labels = Sources.readLabels(spark, s"$dataFolder/$labelFilename.csv")
+      .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
+    val wide0 = IntervalLabeler.labelObservations(Sources.unionWide(traces), labels)
+
+    // instability: the explanation query re-run on N 80% resamples
+    // (`script_1.py:227-241`). The resample id `rs` (-1 = full data,
+    // 0..N-1 = samples) rides every wide row, so ALL N+1 pipeline
+    // instances share ONE plan — one moments aggregate for the correlation
+    // step, one rs-partitioned kernel stage for FP, reward and leap —
+    // instead of N+1 serial plan executions. Sampling is a deterministic
+    // md5 hash of the wide-row key, applied to the WIDE rows — the
+    // reference samples whole wide rows, i.e. every feature of a (window,
+    // class, timestamp) jointly (`script_1.py:228-230`) — kept iff the
+    // 16-bit md5 prefix is under round(cfg.sampleFraction*65536) (exact to
+    // 1/65536), seeded via cfg.seed.
+    // checkpoint the 1x labeled wide table, NOT the (rounds+1)x exploded
+    // view: the explode + md5 filter is a narrow, cheap projection
+    // recomputed per consuming subtree, while materializing after the
+    // explode would pin ~6x the observation bytes — the difference
+    // between "fits in cluster memory" and "doesn't" at full scale.
+    // localCheckpoint (owned lifecycle), not cache(): blocks stay out of
+    // the catalog cache and the ContextCleaner frees them when the plan
+    // drops, so repeated constructExplanations calls in a long-lived
+    // session don't accumulate InMemoryRelations.
+    val rsValues = -1 until cfg.instabilityRounds
+    val sampled =
+      if (cfg.sampleFraction >= 1.0) lit(true)
+      else md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
+        col("timestamp"), col("rs")).cast("binary")) < sampleCutoffHex(cfg.sampleFraction)
+    val wide = wide0.ckptLazy
+      .withColumn("rs", explode(array(rsValues.map(lit(_)): _*)))
+      .where(col("rs") === -1 || sampled)
+    val traceHas = traces.map(t => t.id -> t.metrics.toSet).toMap
+    val expl = explainWide(wide, featureOrder,
+      allFeatures(featureOrder, traces.flatMap(_.metrics)), traceHas, cfg)
+    (expl, labels, featureOrder)
   }
 }

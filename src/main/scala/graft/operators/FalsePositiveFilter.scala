@@ -36,6 +36,16 @@ import graft.functions.MatchKernel
  * passes `ano_ref` — the anomaly's REFERENCE window — as the pattern
  * (`script_1.py:65-66`); `false` uses the anomaly window, the documented
  * intent. Both are supported; the default is script-faithful.
+ *
+ * Off the pipeline path: `ExstreamPipeline` runs the same rule (per-trace
+ * series, a window's count summed over every trace's series of its
+ * resample, the same keep rule and argmin fallback) inside
+ * [[graft.functions.ExplainKernel]], one task per resample group, with no
+ * collect_list, join or repartition. This DataFrame form stays for the
+ * `concat` parity mode (FpConcatGoldenSpec), perfbench's traced layer
+ * composition and PipelineSpec's kernel-vs-operators differential. It
+ * expects non-null values: drop empty cells first (the kernel leaves
+ * them out of series and patterns).
  */
 object FalsePositiveFilter {
 

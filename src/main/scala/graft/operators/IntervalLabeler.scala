@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
  * (`/root/reference/utils/get_data.py:56-106`) as ONE declarative plan.
  *
  * The reference loops label rows per trace and slices the pandas frame
- * twice per anomaly. Here it is a broadcast non-equi join: the label table
- * is tiny (tens of rows), so Catalyst plans a BroadcastNestedLoopJoin and
- * the trace scan streams through it without a shuffle — the shape that
- * survives a 1000-executor scale-up (labels broadcast once, traces never
- * moved).
+ * twice per anomaly. Here it is ONE broadcast join on `trace_id` whose
+ * condition is "inside the ref span OR inside the ano span": the label
+ * table is tiny (tens of rows), so it is broadcast once and the trace scan
+ * streams through it without a shuffle — the shape that survives a
+ * 1000-executor scale-up (labels broadcast once, traces never moved).
  *
  * Bound semantics are reproduced exactly: ref `[ref_start, ref_end)`
  * (`get_data.py:86-88`), ano `[ano_start, ano_end]` (`:93-95`). A
@@ -36,25 +36,21 @@ object IntervalLabeler {
     val l = broadcast(labels)
     val carried = traces.columns.toSeq.filterNot(Set("trace_id", "timestamp"))
       .map(c => traces.col("`" + c.replace("`", "``") + "`"))
+    val ts = traces("timestamp")
+    val inRef = ts >= l("ref_start") && ts < l("ref_end")
+    val inAno = ts >= l("ano_start") && ts <= l("ano_end")
 
-    def side(startCol: String, endCol: String, closedEnd: Boolean, cls: Int): DataFrame = {
-      val endPred =
-        if (closedEnd) traces("timestamp") <= l(endCol)
-        else traces("timestamp") < l(endCol)
-      traces
-        .join(l,
-          traces("trace_id") === l("trace_id") &&
-            traces("timestamp") >= l(startCol) && endPred)
-        .select(Seq(
-          concat_ws("_", l("ano_type"), l("trace_id"), l("label_row")).as("window_key"),
-          traces("trace_id"),
-          l("ano_id"),
-          l("ano_type"),
-          traces("timestamp"),
-          lit(cls).as("type_data")) ++ carried: _*)
-    }
-
-    side("ref_start", "ref_end", closedEnd = false, cls = 0)
-      .unionByName(side("ano_start", "ano_end", closedEnd = true, cls = 1))
+    // one broadcast of the label table, matching either span; a row then
+    // yields one output row per span it lies in
+    traces
+      .join(l, traces("trace_id") === l("trace_id") && (inRef || inAno))
+      .select(Seq(
+        concat_ws("_", l("ano_type"), l("trace_id"), l("label_row")).as("window_key"),
+        traces("trace_id"),
+        l("ano_id"),
+        l("ano_type"),
+        ts,
+        explode(filter(array(when(inRef, lit(0)), when(inAno, lit(1))), _.isNotNull))
+          .as("type_data")) ++ carried: _*)
   }
 }

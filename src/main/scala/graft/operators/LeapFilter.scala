@@ -21,6 +21,16 @@ import org.apache.spark.sql.functions._
  *    threshold (exact float equality), unless the predecessor's reward is
  *    exactly 0.0 (`last_distance != 0` guard, `:299-303`);
  *  - rankings of size 1 are kept unfiltered (`script_1.py:22-26`).
+ *
+ * It runs under Spark's NaN rules, which differ from the reference's
+ * Python comparisons ([[graft.functions.EntropyCore.rewardLeapFilter]])
+ * on non-finite input: `inf - inf` is NaN, NaN is the largest value and
+ * NaN = NaN, so rewards `[inf, inf, 3, 1]` keep `[f0]` here and `[f0, f1]`
+ * there; a NULL reward (a one-class window) never breaks, so null rewards
+ * keep every feature where the pipeline keeps none. The explanation
+ * pipeline and the online operator therefore cut through
+ * `rewardLeapFilter` ([[graft.functions.ExplainKernel]]); this window form
+ * stays, unchanged, for the oracle-pinned events-table queries.
  */
 object LeapFilter {
 

@@ -15,10 +15,10 @@ import org.apache.spark.sql.types._
  * `explore_data.ipynb` cells 2/9), so each trace is read per-file with the
  * schema its own header line declares — read on the driver, no
  * schema-inference scan. The wide frames union by name, a column a trace
- * lacks being null on its rows, and the melt to LONG format uses each
- * trace's own column set ([[meltTraces]]), so schema drift between traces
- * cannot break the plan or invent observations: the long rows are exactly
- * the per-file melts. Each per-file read is still a distributed scan; with
+ * lacks being null on its rows; the pipeline reads each trace's own
+ * column set from [[WideTrace.metrics]], so schema drift between traces
+ * cannot break the plan or invent observations. [[readAllTraces]]' melt to
+ * LONG format is each file's own. Each per-file read is still a distributed scan; with
  * thousands of trace files one would instead group files by schema
  * fingerprint and batch the reads, which keeps driver-side work O(#schemas).
  */
@@ -166,21 +166,8 @@ object Sources {
   }
 
   /** The traces' wide frames as one frame, unioned by name: a column a
-    * trace lacks is null on its rows ([[meltTraces]] drops those again). */
+    * trace lacks is null on its rows (the pipeline knows it is absent from
+    * [[WideTrace.metrics]], not an empty cell). */
   def unionWide(traces: Seq[WideTrace]): DataFrame =
     traces.map(_.frame).reduce(_.unionByName(_, allowMissingColumns = true))
-
-  /** Melt a frame of several traces' wide rows (e.g. [[unionWide]]
-    * output, labeled) to exactly the long rows each trace's own
-    * [[meltTrace]] gives: a column a trace lacks yields no rows for that
-    * trace, an empty cell a null value. One filter term per distinct
-    * column set, none when every trace has the same columns. */
-  def meltTraces(wide: DataFrame, traces: Seq[WideTrace]): DataFrame = {
-    val long = meltTrace(wide, traces.flatMap(_.metrics).distinct)
-    val bySchema = traces.groupBy(_.metrics.toSet).toSeq
-    if (bySchema.size == 1) long
-    else long.where(bySchema.map { case (cols, ts) =>
-      col("trace_id").isin(ts.map(_.id): _*) && col("feature").isin(cols.toSeq: _*)
-    }.reduce(_ || _))
-  }
 }

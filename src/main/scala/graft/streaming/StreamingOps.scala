@@ -292,43 +292,44 @@ object StreamingOps {
 
   /**
    * Pure per-window explanation over a closed buffer — ALL FOUR batch
-   * configs, via the same pure kernels the batch plan uses, in the batch
-   * stage order:
+   * configs, in the batch stage order:
    *
    *  1. correlation-cluster feature dedup
    *     ([[graft.operators.CorrelationFilter.selectFeaturesLocal]] — the
    *     identical moment math + union-find, over this window's rows);
-   *  2. subsequence-match false-positive filter
-   *     ([[graft.functions.MatchKernel.matchCount]] with the batch
-   *     threshold/fallback semantics);
-   *  3. entropy rewards + leap cutoff ([[graft.functions.EntropyCore]]).
+   *  2-3. FP filter, entropy rewards and leap cutoff through
+   *     [[graft.functions.ExplainKernel.explainWindow]], the same
+   *     per-window function the batch pipeline's kernel calls for every
+   *     window, so the two share one core: the same match-count rule and
+   *     argmin fallback, the same reward and the same leap comparisons
+   *     (infinite rewards included). A window with one class only has no
+   *     rewards and the empty explanation, in batch too.
    *
    * Input order is irrelevant: every stage canonicalizes internally
-   * (moments are order-free sums, patterns/series sort by timestamp, the
-   * segmentation kernel sorts by (value, class)), so arrival-order
-   * nondeterminism on the stream cannot change the answer.
+   * (moments are order-free sums, patterns/series sort by (timestamp,
+   * value), the segmentation kernel sorts by (value, class)), so
+   * arrival-order nondeterminism on the stream cannot change the answer.
    *
    * Scope note (the online boundary): steps 1-2 see THIS window's
    * buffered rows — the only data an online operator has at close. Batch
    * computes step 1's moments over all windows and step 2's reference
-   * series over all windows of the trace, so streaming == batch exactly
+   * series over every trace's windows, so streaming == batch exactly
    * when the batch input is the single closing window (the parity test's
    * shape); across multiple windows the streaming answer is the
-   * window-local approximation, bounded by the same reasoning as the
-   * multi-trace series note in [[graft.operators.FalsePositiveFilter]].
-   * A non-empty `refSeries` ([[refSeriesRegistry]]) removes the step-2
-   * half of that boundary: the FP match then runs against the recorded
-   * trace-wide series, and a multi-window trace's close reproduces the
-   * batch FP decision exactly (StreamingSpec's two-window case). Step
-   * 1's correlation moments remain window-local — a moments registry
-   * would be the same pattern if ever needed.
+   * window-local approximation. A non-empty `refSeries`
+   * ([[refSeriesRegistry]]) removes the step-2 half of that boundary: the
+   * FP match then runs against the recorded trace-wide series, and a
+   * multi-window trace's close reproduces the batch FP decision exactly
+   * (StreamingSpec's two-window case). Step 1's correlation moments remain
+   * window-local — a moments registry would be the same pattern if ever
+   * needed.
    */
   def explainBuffered(
       buf: Seq[StreamObs],
       featureOrder: Seq[String],
       cfg: graft.ExstreamConfig,
       refSeries: Map[String, Array[Double]] = Map.empty): Seq[String] = {
-    import graft.functions.{EntropyCore, MatchKernel}
+    import graft.functions.ExplainKernel
 
     // step 1: correlation-cluster dedup over the window's wide pivot
     val selected: Seq[String] =
@@ -338,46 +339,20 @@ object StreamingOps {
           featureOrder, cfg.correlationThreshold)
       else featureOrder
     val byFeature = buf.groupBy(_.feature)
-    val present = selected.filter(byFeature.contains)
+    val patternClass = if (cfg.patternFromRefWindow) 0 else 1
+    def inMatchOrder(rows: Seq[StreamObs], cls: Int): Array[Double] =
+      rows.filter(_.type_data == cls).sortBy(r => (r.timestamp, r.value)).map(_.value).toArray
 
-    // step 2: FP filter — kept iff the window pattern matches the ref
-    // series <= matchCountKeep times; argmin fallback if nothing survives
-    val featIdx = featureOrder.zipWithIndex.toMap
-    val fpKept: Set[String] =
-      if (cfg.falsePositiveFiltering && present.nonEmpty) {
-        val patternClass = if (cfg.patternFromRefWindow) 0 else 1
-        // batch inner-join semantics: a feature participates only with a
-        // non-empty pattern AND a non-empty reference series
-        val counts = present.flatMap { f =>
-          val rows = byFeature(f)
-          // registry series (trace-wide, batch-identical) when available;
-          // the window's own ref rows otherwise
-          val series = refSeries.getOrElse(f,
-            rows.filter(_.type_data == 0)
-              .sortBy(r => (r.timestamp, r.value)).map(_.value).toArray)
-          val pattern = rows.filter(_.type_data == patternClass)
-            .sortBy(r => (r.timestamp, r.value)).map(_.value).toArray
-          if (pattern.isEmpty || series.isEmpty) None
-          else Some(f -> MatchKernel.matchCount(pattern, series, cfg.maxDistance))
-        }
-        val passing = counts.filter(_._2 <= cfg.matchCountKeep).map(_._1)
-        if (passing.nonEmpty) passing.toSet
-        else if (counts.isEmpty) Set.empty[String]
-        else Set(counts.minBy { case (f, n) => (n, featIdx.getOrElse(f, Int.MaxValue)) }._1)
-      } else present.toSet
-
-    // step 3: rewards + leap cutoff
-    val rewards = present.filter(fpKept).flatMap { f =>
+    // steps 2-3: the shared per-window function; the FP series is the
+    // registry's (trace-wide, batch-identical) or the window's own ref rows
+    val features = selected.filter(byFeature.contains).map { f =>
       val rows = byFeature(f)
-      val nAno = rows.count(_.type_data == 1).toLong
-      val nRef = rows.count(_.type_data == 0).toLong
-      if (nAno > 0 && nRef > 0) {
-        val values = rows.map(_.value).toArray
-        val classes = rows.map(_.type_data).toArray
-        Some(f -> EntropyCore.reward(
-          EntropyCore.classEntropy(nAno, nRef), values, classes, cfg.applyWorstCase))
-      } else None
-    }.toMap
-    EntropyCore.rewardLeapFilter(EntropyCore.rankRewards(rewards, featureOrder))
+      ExplainKernel.WindowFeature(f, rows.map(_.value).toArray, rows.map(_.type_data).toArray,
+        rows.count(_.type_data == 1).toLong, rows.count(_.type_data == 0).toLong,
+        if (cfg.falsePositiveFiltering) inMatchOrder(rows, patternClass)
+        else Array.emptyDoubleArray)
+    }
+    ExplainKernel.explainWindow(features,
+      f => Seq(refSeries.getOrElse(f, inMatchOrder(byFeature(f), 0))), cfg)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws, lit, md5}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 import graft.sources.Sources
@@ -145,7 +146,6 @@ class PipelineSpec extends AnyFunSuite {
   test("fused construct matches per-resample explanatoryFeatures run separately " +
       "(full config: clustering + FP filtering)") {
     // every (cluster, fp) config, the full one included
-    import org.apache.spark.sql.functions.{col, concat_ws, lit, md5}
     val (obs, featureOrder, labels) = loaded
     val keyOf = labels.collect().map { r =>
       val (tid, aid) = (r.getAs[String]("trace_id"), r.getAs[Long]("ano_id"))
@@ -161,14 +161,8 @@ class PipelineSpec extends AnyFunSuite {
       // replicate each pipeline instance the SLOW way: apply the fused
       // path's exact md5 sampling predicate per rs, then run the
       // single-instance explanatoryFeatures on that slice
-      def sliceFor(rs: Int) =
-        if (rs == -1) obs
-        else obs.where(
-          md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
-            col("timestamp"), lit(rs)).cast("binary")) <
-            ExstreamPipeline.sampleCutoffHex(cfg.sampleFraction))
       val perRs: Map[Int, Map[String, Seq[String]]] = (-1 until cfg.instabilityRounds).map { rs =>
-        rs -> ExstreamPipeline.explanatoryFeatures(sliceFor(rs), featureOrder, cfg)
+        rs -> ExstreamPipeline.explanatoryFeatures(sliceFor(obs, rs, cfg), featureOrder, cfg)
           .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
       }.toMap
 
@@ -248,8 +242,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** Write a trace folder: `files` maps trace id -> (header columns, rows
-    * of cells, timestamp first), plus a two-window labels file. */
-  private def writeFolder(files: Seq[(String, Seq[String], Seq[Seq[String]])]): String = {
+    * of cells, timestamp first), plus a labels file (default: one window
+    * per trace 1_1 and 2_1, ref [0, 150), ano [200, 260]). */
+  private def writeFolder(
+      files: Seq[(String, Seq[String], Seq[Seq[String]])],
+      labelRows: Seq[String] = Seq("0,1_1,0,0,150,200,260,x", "1,2_1,0,0,150,200,260,x")): String = {
     val dir = java.nio.file.Files.createTempDirectory("pipeline-spec-drift")
     dir.toFile.deleteOnExit()
     def write(name: String, lines: Seq[String]): Unit = {
@@ -260,8 +257,7 @@ class PipelineSpec extends AnyFunSuite {
     files.foreach { case (id, cols, rows) =>
       write(s"$id.csv", ("" +: cols).mkString(",") +: rows.map(_.mkString(",")))
     }
-    write("labels.csv", Seq(",trace_id,ano_id,ref_start,ref_end,ano_start,ano_end,ano_type",
-      "0,1_1,0,0,150,200,260,x", "1,2_1,0,0,150,200,260,x"))
+    write("labels.csv", ",trace_id,ano_id,ref_start,ref_end,ano_start,ano_end,ano_type" +: labelRows)
     dir.toString
   }
 
@@ -326,10 +322,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(messages.contains("3_1.csv"), messages)
   }
 
-  test("constructExplanations plan build runs 4 jobs: no schema inference, no pivot") {
+  test("constructExplanations plan build runs 3 jobs: one label broadcast, no schema " +
+      "inference, no pivot") {
     // jobs run while the plan is BUILT, before any action: only the
-    // correlation step's moment aggregate, i.e. the interval join's two
-    // label broadcasts (ref and ano spans), the aggregate's shuffle map
+    // correlation step's moment aggregate, i.e. the interval join's one
+    // label broadcast (ref OR ano span), the aggregate's shuffle map
     // stage and its collect. Every file's header is read on the driver,
     // with no schema-inference scan, and no long -> wide pivot is planned.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -347,7 +344,153 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.spark.ListenerBusDrain(sc)
       df
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 4, s"${jobs.get} jobs during plan build")
+    assert(jobs.get == 3, s"${jobs.get} jobs during plan build")
     assert(plan.count() == 4)
+  }
+
+  /** `obs` restricted to resample `rs` with the pipeline's md5 sample of
+    * whole wide rows; `rs` -1 is the full data. */
+  private def sliceFor(obs: DataFrame, rs: Int, cfg: ExstreamConfig): DataFrame =
+    if (rs == -1) obs
+    else obs.where(
+      md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
+        col("timestamp"), lit(rs)).cast("binary")) <
+        ExstreamPipeline.sampleCutoffHex(cfg.sampleFraction))
+
+  /** Steps 1-3 composed from the public operators — correlation
+    * selection, `matchCounts` -> `filterObservations` ->
+    * `EntropyReward.rewards` -> `LeapFilter.explanations` — for every
+    * config `c` and resample `rs` in one plan: each row is copied once per
+    * config and `(c, rs)` is folded into the window key and the FP series
+    * alignment key. The configs share every parameter but `cluster` and
+    * `falsePositiveFiltering`. An empty cell takes no part in the FP match
+    * (pattern and series) but still counts in the class sizes.
+    * @return `(c, rs, window_key) -> features` */
+  private def composedByRs(obs: DataFrame, featureOrder: Seq[String], cfgs: Seq[ExstreamConfig],
+                           rsValues: Seq[Int]): Map[(Int, Int, String), Seq[String]] = {
+    val base = cfgs.head
+    val featIdx = featureOrder.zipWithIndex.toMap
+    val withRs = rsValues.map(rs => sliceFor(obs, rs, base).withColumn("rs", lit(rs)))
+      .reduce(_ unionByName _)
+    val selByRs = CorrelationFilter.selectFeaturesBy(
+      ExstreamPipeline.unfoldRs(ExstreamPipeline.pivotWide(
+        withRs.withColumn("window_key", ExstreamPipeline.rsKey(col("window_key"))), featureOrder)),
+      featureOrder, base.correlationThreshold, "rs")
+    val byCfg = cfgs.zipWithIndex.map { case (cfg, c) =>
+      val rows = withRs.withColumn("c", lit(c))
+      if (!cfg.cluster) rows
+      else rows.where(rsValues.map(rs =>
+        col("rs") === rs && col("feature").isin(selByRs(rs): _*)).reduce(_ || _))
+    }
+    val fpCfgs = cfgs.indices.filter(cfgs(_).falsePositiveFiltering)
+    val folded = byCfg.reduce(_ unionByName _)
+      .withColumn("k", concat_ws("/", col("c"), col("rs")))
+      .withColumn("window_key", concat_ws("#", col("k"), col("window_key")))
+      .localCheckpoint() // one scan of the slices for the FP and reward branches
+    val fpRows = folded.where(col("c").isin(fpCfgs: _*))
+    val filtered = folded.where(!col("c").isin(fpCfgs: _*)).unionByName(
+      FalsePositiveFilter.filterObservations(fpRows, FalsePositiveFilter.matchCounts(
+        fpRows.where(col("value").isNotNull), featIdx, base.maxDistance, base.matchCountKeep,
+        base.patternFromRefWindow, seriesAlignKeys = Seq("k"))))
+    val rewards = EntropyReward.rewards(filtered, base.applyWorstCase)
+      .withColumn("feat_idx", EntropyReward.featIdxCol(featIdx, col("feature")))
+    LeapFilter.explanations(rewards).collect().map { r =>
+      val Array(k, wk) = r.getString(0).split("#", 2)
+      val Array(c, rs) = k.split("/")
+      (c.toInt, rs.toInt, wk) -> r.getSeq[String](1)
+    }.toMap
+  }
+
+  test("differential: the per-rs kernel equals the public-operator composition on " +
+      "traces, traces_f2 and a drifting folder with empty cells, all four configs") {
+    // the kernel side is constructExplanations' own plan, every rs at
+    // once, before the instability tail; the composition reads the same
+    // folder through readAllTraces' per-file melt.
+    // One more empty cell, inside 2_1's reference span: absent from that
+    // trace's f_d series and from the window's f_d pattern, still counted
+    val gap = driftFiles.map {
+      case ("2_1", cols, rows) => ("2_1", cols,
+        rows.map(r => if (r.head == "40") r.updated(1 + cols.indexOf("f_d"), "") else r))
+      case other => other
+    }
+    val folders = Seq("src/test/resources/traces", "src/test/resources/traces_f2", writeFolder(gap))
+    val cfgs = for (cluster <- Seq(false, true); fp <- Seq(false, true))
+      yield ExstreamConfig(cluster = cluster, falsePositiveFiltering = fp,
+        maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
+    folders.foreach { dir =>
+      val (traceLong, featureOrder) = Sources.readAllTraces(spark, dir, "labels")
+      val labels = Sources.readLabels(spark, s"$dir/labels.csv")
+        .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
+      val obs = IntervalLabeler.labelObservations(traceLong, labels).cache()
+      val composed = composedByRs(obs, featureOrder, cfgs, Seq(-1, 0, 1))
+      cfgs.zipWithIndex.foreach { case (cfg, c) =>
+        val kernel = ExstreamPipeline.explainFolder(spark, dir, "labels", cfg)._1.collect()
+          .map(r => (c, r.getInt(0), r.getString(1)) -> r.getSeq[String](2)).toMap
+        assert(kernel.nonEmpty && kernel == composed.filter(_._1._1 == c),
+          s"$dir cluster=${cfg.cluster} fp=${cfg.falsePositiveFiltering}")
+      }
+      obs.unpersist()
+    }
+  }
+
+  test("infinite rewards: two features whose anomaly cells are all empty both lead " +
+      "the explanation, as the reference's leap comparisons rank them") {
+    // f_a and f_b have no anomaly-span value: their non-empty cells are one
+    // class, so the segmentation entropy is 0 and the reward +inf; f_c
+    // shifts inside the anomaly, f_d is noise
+    val rnd = new scala.util.Random(11)
+    val cols = Seq("f_a", "f_b", "f_c", "f_d")
+    val rows = (0 until 300).map { ts =>
+      val ano = ts >= 200 && ts <= 260
+      ts.toString +: cols.map {
+        case "f_a" | "f_b" if ano => ""
+        case "f_c" => f"${rnd.nextGaussian() + (if (ano) 4.0 else 0.0)}%.6f"
+        case _ => f"${rnd.nextGaussian()}%.6f"
+      }
+    }
+    val dir = writeFolder(Seq(("1_1", cols, rows)), Seq("0,1_1,0,0,150,200,260,x"))
+    val cfg = ExstreamConfig(cluster = false, falsePositiveFiltering = false, instabilityRounds = 1)
+    val got = ExstreamPipeline.constructExplanations(spark, dir, "labels", cfg).collect()
+    assert(got.map(_.getSeq[Int](2)).toSeq == Seq(Seq(0, 1)), got.toSeq)
+
+    // the same answer from the public rewards operator and the pure leap
+    // cut; LeapFilter's Spark NaN rules (inf - inf = NaN = the largest
+    // leap) cut after the first feature instead
+    val (traceLong, featureOrder) = Sources.readAllTraces(spark, dir, "labels")
+    val labels = Sources.readLabels(spark, s"$dir/labels.csv")
+      .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
+    val rewards = EntropyReward.rewards(
+      IntervalLabeler.labelObservations(traceLong, labels), cfg.applyWorstCase)
+      .withColumn("feat_idx", EntropyReward.featIdxCol(featureOrder.zipWithIndex.toMap, col("feature")))
+    val byFeature = rewards.collect().map(r => r.getAs[String]("feature") -> r.getAs[Double]("reward")).toMap
+    assert(byFeature("f_a").isPosInfinity && byFeature("f_b").isPosInfinity, byFeature)
+    assert(graft.functions.EntropyCore.rewardLeapFilter(
+      graft.functions.EntropyCore.rankRewards(byFeature, featureOrder)) == Seq("f_a", "f_b"))
+    assert(LeapFilter.explanations(rewards).collect().map(_.getSeq[String](1)).toSeq ==
+      Seq(Seq("f_a")))
+  }
+
+  test("one-class window: an anomaly span past the trace's end gives the empty " +
+      "explanation in batch, as explainBuffered does") {
+    val dir = writeFolder(driftFiles.take(1),
+      Seq("0,1_1,0,0,150,200,260,x", "1,1_1,1,0,150,400,460,x"))
+    for (cluster <- Seq(false, true); fp <- Seq(false, true)) {
+      val cfg = ExstreamConfig(cluster = cluster, falsePositiveFiltering = fp,
+        maxDistance = 5.0, instabilityRounds = 2)
+      val got = ExstreamPipeline.constructExplanations(spark, dir, "labels", cfg).collect()
+        .map(r => r.getLong(1) -> r).toMap
+      val tag = s"cluster=$cluster fp=$fp"
+      assert(got.keySet == Set(0L, 1L), tag)
+      assert(got(0L).getSeq[Int](2).nonEmpty, tag)
+      assert(got(1L).getSeq[Int](2).isEmpty && got(1L).getInt(3) == 0 &&
+        got(1L).getDouble(4) == 0.0, s"$tag: ${got(1L)}")
+
+      val (_, cols, rows) = driftFiles.head
+      val refOnly = for {
+        r <- rows if r.head.toLong < 150
+        (f, v) <- cols.zip(r.tail) if v.nonEmpty
+      } yield graft.streaming.StreamingOps.StreamObs("w", f, r.head.toLong, 0, v.toDouble)
+      assert(graft.streaming.StreamingOps.explainBuffered(refOnly, cols, cfg).isEmpty, tag)
+    }
   }
 }
