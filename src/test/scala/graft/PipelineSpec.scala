@@ -322,13 +322,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(messages.contains("3_1.csv"), messages)
   }
 
-  test("constructExplanations plan build runs 3 jobs: one label broadcast, no schema " +
-      "inference, no pivot") {
+  test("constructExplanations plan build runs 4 jobs: no schema inference, no pivot") {
     // jobs run while the plan is BUILT, before any action: only the
     // correlation step's moment aggregate, i.e. the interval join's one
     // label broadcast (ref OR ano span), the aggregate's shuffle map
     // stage and its collect. Every file's header is read on the driver,
     // with no schema-inference scan, and no long -> wide pivot is planned.
+    // The name keeps the count this test was introduced with (4, when the
+    // join broadcast the label table once per class side); the pin is
+    // now the tighter 3.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val cfg = ExstreamConfig(cluster = true, falsePositiveFiltering = true,
       maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
