@@ -1,6 +1,5 @@
 package graft
 
-import graft.Ckpt._
 import graft.functions.ExplainKernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,16 +14,16 @@ import graft.sources.Sources
  *
  * Stage shape (§3.4) of [[constructExplanations]]: wide scan (schema from
  * each file's header, no inference job) -> ONE broadcast interval join of
- * the WIDE rows (no shuffle) -> checkpoint -> resample explode + md5
- * sample per wide row -> wide moments: one array aggregate per resample,
- * the k x k correlation step's only job -> the wide rows hash-partitioned
- * on the resample id `rs` into `defaultParallelism` partitions, one pure
- * kernel per `rs` group for FP filter, reward and leap cut
- * ([[graft.functions.ExplainKernel]]) -> instability: collect_list of the
- * small `(rs, window_key, features)` output, a join back to the labels
- * and a UDF. Trace rows are never melted to long rows and never shuffled
- * per (window, feature); the only driver-side data are the per-resample
- * moment arrays and the final explanation rows.
+ * the WIDE rows -> resample explode + md5 sample per wide row -> one
+ * shuffle that gives every resample id `rs` its own partition -> ONE
+ * kernel stage, one task per `rs` group running correlation selection,
+ * FP filter, reward and leap cut ([[graft.functions.ExplainKernel]]) ->
+ * instability: one aggregate per window of the small `(rs, window_key,
+ * features)` output (main explanation + resample list), one join back to
+ * the labels and a UDF. Building the plan runs no job; the kernel stage
+ * runs once. Trace rows are never melted to long rows and never shuffled
+ * per (window, feature); the only driver-side data are the final
+ * explanation rows.
  *
  * Steps 1-3 (correlation dedup -> FP filter -> reward + leap cutoff) are
  * composed once, in `explainWide`, over wide rows carrying `rs`:
@@ -59,7 +58,7 @@ object ExstreamPipeline {
       .map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap
     val features = allFeatures(featureOrder, traceHas.values.flatten)
     explainWide(pivotWide(obs, features).withColumn("rs", lit(-1)),
-      featureOrder, features, traceHas, cfg)
+      featureOrder, features, traceHas, groups = 1, cfg)
       .select("window_key", "features")
   }
 
@@ -84,19 +83,20 @@ object ExstreamPipeline {
   /**
    * Steps 1-3 of the explanation query — correlation dedup, FP filter,
    * entropy reward + leap cutoff — for every resample instance `rs` at
-   * once. Step 1 takes every instance's correlation moments from one
-   * aggregation pass over the wide rows. The wide rows are then
-   * hash-partitioned on `rs` into `defaultParallelism` partitions, and
-   * each `rs` group runs steps 2-3 in one task through
-   * [[graft.functions.ExplainKernel.explainGroup]]: FP series are aligned
-   * on `rs`, so a resampled window only matches against its own
-   * resample's reference series.
+   * once. The wide rows are shuffled so that every `rs` group is one
+   * partition, and each group runs steps 1-3 in its own task through
+   * [[graft.functions.ExplainKernel.explainGroup]]. The reference re-runs
+   * get_explanatory_features, clustering included, on each resample
+   * (`script_1.py:213-222`), so correlation selection is per `rs`; FP
+   * series are aligned on `rs`, so a resampled window only matches
+   * against its own resample's reference series.
    *
    * @param wide     wide rows `(rs, window_key, trace_id, timestamp,
    *                 type_data, <features>)`, one nullable column per
-   *                 feature (null = empty cell)
+   *                 feature (null = empty cell), `rs` in `[-1, groups - 1)`
    * @param features the value columns of `wide`: `featureOrder` first
    * @param traceHas the feature columns each trace has
+   * @param groups   the number of `rs` values
    * @return `(rs, window_key, features: array<string>)`
    */
   private def explainWide(
@@ -104,31 +104,24 @@ object ExstreamPipeline {
       featureOrder: Seq[String],
       features: IndexedSeq[String],
       traceHas: Map[String, Set[String]],
+      groups: Int,
       cfg: ExstreamConfig): DataFrame = {
     val spark = wide.sparkSession
     import spark.implicits._
 
-    // step 1, per rs: correlation-cluster feature dedup — the reference
-    // re-runs get_explanatory_features (clustering included) on each
-    // resample (`script_1.py:213-222`), so feature selection is per-rs;
-    // all moment arrays come from ONE aggregation pass over the wide rows.
-    val selByRs: Map[Int, Seq[String]] =
-      if (cfg.cluster && featureOrder.size > 1)
-        CorrelationFilter.selectFeaturesBy(wide, featureOrder, cfg.correlationThreshold, "rs")
-      else Map.empty
-
-    // steps 2-3, per rs group: explicit-N repartition (AQE honors a
-    // user-specified count) — each group carries O(n*m) match kernels,
-    // and without the pin AQE packs the few byte-light groups onto ONE
-    // task and runs them serially
+    // partition id = rs + 1: one task per group, with no hash collisions
+    // and no sampling job; an explicit count, so AQE cannot coalesce the
+    // byte-light groups onto one task and run their O(n*m) match kernels
+    // serially
     val k = features.size
     wide.select(Seq(col("rs").cast("int"), col("window_key").cast("string"),
         col("trace_id").cast("string"), col("timestamp").cast("long"),
         col("type_data").cast("int")) ++
         features.map(f => col(quoted(f)).cast("double")): _*)
-      .repartition(spark.sparkContext.defaultParallelism, col("rs"))
+      .repartitionById(groups, col("rs") + 1)
       .mapPartitions { it =>
-        val groups = scala.collection.mutable.LinkedHashMap[Int, ExplainKernel.WideRows]()
+        val rows = new ExplainKernel.WideRows(k)
+        var rs = 0
         val v = new Array[Double](k)
         val empty = new Array[Boolean](k)
         it.foreach { r =>
@@ -138,14 +131,11 @@ object ExstreamPipeline {
             v(j) = if (empty(j)) 0.0 else r.getDouble(5 + j)
             j += 1
           }
-          groups.getOrElseUpdate(r.getInt(0), new ExplainKernel.WideRows(k))
-            .add(r.getString(1), r.getString(2), r.getLong(3), r.getInt(4), v, empty)
+          rs = r.getInt(0)
+          rows.add(r.getString(1), r.getString(2), r.getLong(3), r.getInt(4), v, empty)
         }
-        groups.iterator.flatMap { case (rs, rows) =>
-          val selected = selByRs.getOrElse(rs, features).toSet
-          ExplainKernel.explainGroup(rows, features, traceHas, selected, cfg)
-            .map { case (w, f) => (rs, w, f) }
-        }
+        ExplainKernel.explainGroup(rows, features, featureOrder, traceHas, cfg)
+          .iterator.map { case (w, f) => (rs, w, f) }
       }
       .toDF("rs", "window_key", "features")
   }
@@ -192,13 +182,16 @@ object ExstreamPipeline {
     val (expl, labels, featureOrder) = explainFolder(spark, dataFolder, labelFilename, cfg)
     val featIdx = featureOrder.zipWithIndex.toMap
 
-    val main = expl.where(col("rs") === -1).select("window_key", "features")
-    val resamples = expl.where(col("rs") >= 0)
-      .groupBy("window_key").agg(collect_list(col("features")).as("exps"))
+    // the kernel output read once: per window its main explanation (rs -1;
+    // a window without one is dropped) and its resample explanations
+    // (rs >= 0; none gives instability 0.0)
+    val byWindow = expl.groupBy("window_key").agg(
+        first(when(col("rs") === -1, col("features")), ignoreNulls = true).as("features"),
+        collect_list(when(col("rs") >= 0, col("features"))).as("exps"))
+      .where(col("features").isNotNull)
 
     val instabilityUdf = udf { (exps: Seq[Seq[String]]) =>
-      graft.functions.EntropyCore.instabilityEntropy(
-        Option(exps).getOrElse(Seq.empty).filter(_ != null))
+      graft.functions.EntropyCore.instabilityEntropy(exps)
     }
 
     // window_key = ano_type_trace_id_label_row; join back to labels on the
@@ -208,8 +201,7 @@ object ExstreamPipeline {
       concat_ws("_", col("ano_type"), col("trace_id"), col("label_row")).as("window_key"),
       col("trace_id"), col("ano_id"))
 
-    keyed.join(main, Seq("window_key"), "inner")
-      .join(resamples, Seq("window_key"), "left")
+    keyed.join(byWindow, Seq("window_key"), "inner")
       .withColumn("explanation", transform(col("features"),
         f => EntropyReward.featIdxCol(featIdx, f, default = -1)))
       .withColumn("exp_size", size(col("explanation")))
@@ -235,34 +227,28 @@ object ExstreamPipeline {
     // instability: the explanation query re-run on N 80% resamples
     // (`script_1.py:227-241`). The resample id `rs` (-1 = full data,
     // 0..N-1 = samples) rides every wide row, so ALL N+1 pipeline
-    // instances share ONE plan — one moments aggregate for the correlation
-    // step, one rs-partitioned kernel stage for FP, reward and leap —
+    // instances share ONE plan and one kernel stage, one task per rs,
     // instead of N+1 serial plan executions. Sampling is a deterministic
     // md5 hash of the wide-row key, applied to the WIDE rows — the
     // reference samples whole wide rows, i.e. every feature of a (window,
     // class, timestamp) jointly (`script_1.py:228-230`) — kept iff the
     // 16-bit md5 prefix is under round(cfg.sampleFraction*65536) (exact to
     // 1/65536), seeded via cfg.seed.
-    // checkpoint the 1x labeled wide table, NOT the (rounds+1)x exploded
-    // view: the explode + md5 filter is a narrow, cheap projection
-    // recomputed per consuming subtree, while materializing after the
-    // explode would pin ~6x the observation bytes — the difference
-    // between "fits in cluster memory" and "doesn't" at full scale.
-    // localCheckpoint (owned lifecycle), not cache(): blocks stay out of
-    // the catalog cache and the ContextCleaner frees them when the plan
-    // drops, so repeated constructExplanations calls in a long-lived
-    // session don't accumulate InMemoryRelations.
+    // No checkpoint: the kernel stage's shuffle is the labeled wide rows'
+    // only consumer, so the scan, the label join and the explode + md5
+    // filter run once, map-side of it; a checkpoint would only add a
+    // materialization.
     val rsValues = -1 until cfg.instabilityRounds
     val sampled =
       if (cfg.sampleFraction >= 1.0) lit(true)
       else md5(concat_ws("_", lit(cfg.seed), col("window_key"), col("type_data"),
         col("timestamp"), col("rs")).cast("binary")) < sampleCutoffHex(cfg.sampleFraction)
-    val wide = wide0.ckptLazy
+    val wide = wide0
       .withColumn("rs", explode(array(rsValues.map(lit(_)): _*)))
       .where(col("rs") === -1 || sampled)
     val traceHas = traces.map(t => t.id -> t.metrics.toSet).toMap
     val expl = explainWide(wide, featureOrder,
-      allFeatures(featureOrder, traces.flatMap(_.metrics)), traceHas, cfg)
+      allFeatures(featureOrder, traces.flatMap(_.metrics)), traceHas, rsValues.size, cfg)
     (expl, labels, featureOrder)
   }
 }

@@ -1,18 +1,21 @@
 package graft.functions
 
 import graft.ExstreamConfig
+import graft.operators.CorrelationFilter
 
 /**
- * Steps 2–3 of the EXstream explanation — false-positive filter, entropy
- * reward and leap cut (`exstream.pdf` §3–4; reference
- * `false_positive_filtering.py`, `entropy_based_single_reward_feature.py`)
- * — as pure code over primitive arrays. [[explainWindow]] is the one
- * per-window function: the batch pipeline reaches it through
- * [[explainGroup]], one call per resample group of wide rows, and the
- * online operator (`StreamingOps.explainBuffered`) calls it directly on a
- * closed window's buffer.
+ * The EXstream explanation — correlation selection, false-positive
+ * filter, entropy reward and leap cut (`exstream.pdf` §3–4; reference
+ * `correlation_filtering.py`, `false_positive_filtering.py`,
+ * `entropy_based_single_reward_feature.py`) — as pure code over primitive
+ * arrays. The batch pipeline calls [[explainGroup]] once per resample
+ * group of wide rows, in that group's own task: step 1 over the whole
+ * group, then steps 2–3 per window. [[explainWindow]] is the one
+ * per-window function for steps 2–3; the online operator
+ * (`StreamingOps.explainBuffered`) calls it directly on a closed window's
+ * buffer, after its own window-local correlation step.
  *
- * Rules, for one window:
+ * Rules of steps 2–3, for one window:
  *  - FP filter: a feature enters only with a non-empty pattern and at
  *    least one non-empty reference series; its match count is summed over
  *    all of its series (batch: one per trace of the group). Kept iff the
@@ -114,33 +117,48 @@ object ExplainKernel {
   }
 
   /**
-   * Steps 2–3 for every window of one resample group.
+   * Steps 1–3 for every window of one resample group.
    *
-   * A feature column a trace lacks gives that trace no rows for the
-   * feature; an empty cell is absent from series and pattern but counts
+   * Step 1, correlation selection (`cfg.cluster`, at least two candidates):
+   * the group sums its own pairwise-deletion moments over the
+   * `featureOrder` columns of every row ([[PairMoments.accumulate]]; an
+   * empty cell or a column the row's trace lacks is absent) and keeps the
+   * representative of each correlation cluster
+   * (`CorrelationFilter.selectByCorr`). Without it every column is a
+   * candidate.
+   *
+   * Steps 2–3: a feature column a trace lacks gives that trace no rows for
+   * the feature; an empty cell is absent from series and pattern but counts
    * toward the class sizes. Each (trace, feature) reference series is
    * built once, from the trace's reference rows in (window_key, timestamp,
    * value) order, and every window's pattern is matched against the
    * series of every trace. A pattern is ordered by (trace_id, timestamp,
    * value), so a window may span several traces.
    *
-   * @param features    the column of each `rows` value slot, in original
-   *                    column order
-   * @param traceHas    the feature columns each trace has
-   * @param selected    the features the correlation step kept
+   * @param features     the column of each `rows` value slot, in original
+   *                     column order
+   * @param featureOrder the correlation candidates: the leading slots of
+   *                     `features`
+   * @param traceHas     the feature columns each trace has
    * @return per window of the group, its explanation
    */
   def explainGroup(
       rows: WideRows,
       features: IndexedSeq[String],
+      featureOrder: Seq[String],
       traceHas: Map[String, Set[String]],
-      selected: Set[String],
       cfg: ExstreamConfig): Seq[(String, Seq[String])] = {
     val has = rows.traceId.iterator.take(rows.n).distinct.map { t =>
       val cols = traceHas.getOrElse(t, Set.empty[String])
       t -> features.map(cols).toArray
     }.toMap
-    val sel = features.indices.filter(j => selected(features(j)))
+    val sel =
+      if (!cfg.cluster || featureOrder.size <= 1) features.indices
+      else {
+        val keep = CorrelationFilter.selectByCorr(featureOrder, cfg.correlationThreshold,
+          moments(rows, featureOrder.size, has)).toSet
+        features.indices.filter(j => keep(features(j)))
+      }
     val fp = cfg.falsePositiveFiltering
     val patternClass = if (cfg.patternFromRefWindow) 0 else 1
 
@@ -185,5 +203,27 @@ object ExplainKernel {
       }
       wk -> explainWindow(feats, series.getOrElse(_, Nil), cfg)
     }
+  }
+
+  /** The [[PairMoments]] array of the first `kc` value slots over every
+    * row of `rows`; a cell is present iff it is non-empty and its trace
+    * has the column (`has`). */
+  private def moments(rows: WideRows, kc: Int, has: Map[String, Array[Boolean]]): Array[Double] = {
+    val m = PairMoments.empty(kc)
+    val x = new Array[Double](kc)
+    val present = new Array[Boolean](kc)
+    var r = 0
+    while (r < rows.n) {
+      val h = has(rows.traceId(r))
+      var j = 0
+      while (j < kc) {
+        present(j) = h(j) && !rows.empty(j)(r)
+        x(j) = rows.values(j)(r)
+        j += 1
+      }
+      PairMoments.accumulate(m, x, present)
+      r += 1
+    }
+    m
   }
 }

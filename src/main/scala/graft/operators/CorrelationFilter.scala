@@ -10,17 +10,23 @@ import graft.plans.PairMomentsAgg
  * — `correlated_features_filter`
  * (`/root/reference/exstream/correlation_filtering.py:7-67`).
  *
- * All pairwise Pearson correlations come from ONE distributed
- * aggregation pass over the wide rows: one array-valued aggregate
- * (`graft_pair_moments`, [[PairMomentsAgg]]) whose per-row update feeds
- * the moment sums of all k(k-1)/2 feature pairs — k is the feature count,
- * dozens at most, so the aggregate row is tiny. Null cells are absent
- * (pandas' pairwise deletion); the division happens driver-side in plain
- * Scala, where a zero denominator is just "no edge" (pandas' NaN), and
- * moment-form cancellation costs a couple of the 16 digits — irrelevant
- * for an |corr| > threshold decision. Graph building and connected
- * components run driver-side on the k x k result, which is the right
- * placement: the data-sized work is the scan, the graph is O(k²).
+ * All pairwise Pearson correlations come from [[PairMoments]] sums: one
+ * per-row update feeds the moment sums of all k(k-1)/2 feature pairs — k
+ * is the feature count, dozens at most, so the moment array is tiny. Null
+ * cells are absent (pandas' pairwise deletion); a zero denominator is just
+ * "no edge" (pandas' NaN), and moment-form cancellation costs a couple of
+ * the 16 digits — irrelevant for an |corr| > threshold decision. Graph
+ * building and connected components ([[selectByCorr]]) run on the k x k
+ * result.
+ *
+ * Three callers sum the moments: `ExstreamPipeline` inside each resample
+ * group's kernel task (`ExplainKernel.explainGroup`, no aggregate and no
+ * collect), the streaming at-close path over one window
+ * ([[selectFeaturesLocal]]), and the public DataFrame operator
+ * [[selectFeaturesBy]], one distributed aggregation pass
+ * (`graft_pair_moments`, [[PairMomentsAgg]]) collected to the driver —
+ * kept for perfbench's traced layer composition and PipelineSpec's
+ * kernel-vs-operators differential, off the pipeline path.
  *
  * Deliberate divergences (SURVEY §4a quirks 4/5/7):
  *  - correlations are computed over feature columns only (the reference
@@ -36,9 +42,9 @@ object CorrelationFilter {
   /** The pure graph core: union-find clustering with an edge iff
     * |corr(i,j)| > threshold (NaN = undefined = no edge) over one
     * [[PairMoments]] array; each cluster's representative is its smallest
-    * original column index. Shared by the distributed aggregate path and
-    * the streaming window-local path. */
-  private def selectByCorr(
+    * original column index. Shared by the per-group pipeline kernel, the
+    * distributed aggregate and the streaming window-local path. */
+  private[graft] def selectByCorr(
       featureOrder: Seq[String],
       correlationThreshold: Double,
       moments: Array[Double]): Seq[String] = {
@@ -56,9 +62,9 @@ object CorrelationFilter {
    * Window-local pure variant for the streaming at-close path: the same
    * moment accumulation and union-find over ONE closed window's buffered
    * observations (the only data an online operator has at close). Batch
-   * computes the moments over every window in one distributed pass; on a
-   * single-window input the two are identical, which is what the
-   * streaming/batch parity test pins.
+   * sums the moments over every window of a resample group in that
+   * group's kernel task; on a single-window input the two are identical,
+   * which is what the streaming/batch parity test pins.
    *
    * @param rows (timestamp, type_data, feature, value) — one value per
    *             (timestamp, type_data, feature), the wide-pivot contract;

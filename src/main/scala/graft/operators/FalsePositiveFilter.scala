@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Ckpt._
 import graft.functions.MatchKernel
 
 /**
@@ -107,6 +108,9 @@ object FalsePositiveFilter {
       s"unknown refSeriesMode $refSeriesMode")
     val spark = obs.sparkSession
     import spark.implicits._
+    // the series and pattern aggregates both read the observations:
+    // materialize them once rather than recompute the input plan per branch
+    val observations = obs.ckptLazy
 
     // reference series per (feature, [align keys], trace), canonical order
     // inside the trace — row size bounded by one trace's ref span.
@@ -127,7 +131,7 @@ object FalsePositiveFilter {
             map(traceOrder.zipWithIndex.flatMap { case (t, i) =>
               Seq(lit(t), lit(i)) }: _*), $"trace_id").cast("string"), 9, "0"),
           concat(lit("z_"), $"trace_id")) // unlisted traces: after, by id
-      obs
+      observations
         .where($"type_data" === 0)
         .groupBy("feature", seriesAlignKeys: _*)
         .agg(
@@ -137,7 +141,7 @@ object FalsePositiveFilter {
               $"timestamp", $"value".cast("double").as("value")))),
             x => x.getField("value")
           ).as("series"))
-    } else obs
+    } else observations
       .where($"type_data" === 0)
       .groupBy("feature", seriesAlignKeys :+ "trace_id": _*)
       .agg(
@@ -150,7 +154,7 @@ object FalsePositiveFilter {
 
     // pattern = this window's ref rows (script-faithful) or ano rows
     val patternClass = if (patternFromRefWindow) 0 else 1
-    val patterns = obs
+    val patterns = observations
       .where($"type_data" === patternClass)
       .groupBy("window_key", "feature" +: seriesAlignKeys: _*)
       .agg(collect_list(struct(
@@ -184,7 +188,10 @@ object FalsePositiveFilter {
       .select("window_key", "feature", "n_matches", "kept")
   }
 
-  /** Restrict an observation table to the features kept per window. */
+  /** Restrict an observation table to the features kept per window.
+    * `obs` is read here and, through `kept`, by [[matchCounts]]: pass a
+    * materialized frame (e.g. `localCheckpoint`) when it is also the
+    * `matchCounts` input, or its plan runs once more for this join. */
   def filterObservations(obs: DataFrame, kept: DataFrame): DataFrame =
     obs.join(
       kept.where(col("kept")).select("window_key", "feature"),

@@ -323,14 +323,13 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("constructExplanations plan build runs 4 jobs: no schema inference, no pivot") {
-    // jobs run while the plan is BUILT, before any action: only the
-    // correlation step's moment aggregate, i.e. the interval join's one
-    // label broadcast (ref OR ano span), the aggregate's shuffle map
-    // stage and its collect. Every file's header is read on the driver,
-    // with no schema-inference scan, and no long -> wide pivot is planned.
-    // The name keeps the count this test was introduced with (4, when the
-    // join broadcast the label table once per class side); the pin is
-    // now the tighter 3.
+    // no job runs while the plan is BUILT, before any action: every
+    // file's header is read on the driver, with no schema-inference scan,
+    // no long -> wide pivot is planned, and correlation selection runs
+    // inside the kernel tasks, with no moments aggregate collected to the
+    // driver. The name keeps the count this test was introduced with (4,
+    // when the join broadcast the label table once per class side and the
+    // moments aggregate ran at build); the pin is now the tighter 0.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val cfg = ExstreamConfig(cluster = true, falsePositiveFiltering = true,
       maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
@@ -346,8 +345,44 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.spark.ListenerBusDrain(sc)
       df
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 3, s"${jobs.get} jobs during plan build")
+    assert(jobs.get == 0, s"${jobs.get} jobs during plan build")
     assert(plan.count() == 4)
+  }
+
+  test("constructExplanations runs its kernel stage once, one task per resample group, " +
+      "every task reading rows") {
+    // the kernel stage is the one stage whose RDDs include the kernel's
+    // MapPartitions operator; its tasks read the rs-partitioned shuffle
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+    val cfg = ExstreamConfig(cluster = true, falsePositiveFiltering = true,
+      maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Boolean)]()
+    val taskReads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.add((
+        e.stageInfo.stageId, e.stageInfo.numTasks,
+        e.stageInfo.rddInfos.exists(_.scope.exists(_.name == "MapPartitions"))))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          taskReads.add((e.stageId, e.taskMetrics.shuffleReadMetrics.recordsRead))
+    }
+    val sc = spark.sparkContext
+    val df = ExstreamPipeline.constructExplanations(spark, fixtureDir, "labels", cfg)
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val rows = try {
+      val out = df.collect()
+      org.apache.spark.ListenerBusDrain(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(rows.length == 4)
+    import scala.jdk.CollectionConverters._
+    val kernel = stages.asScala.toSeq.filter(_._3)
+    assert(kernel.size == 1, s"kernel stage ran ${kernel.size} times: $kernel")
+    val (stageId, numTasks, _) = kernel.head
+    assert(numTasks == cfg.instabilityRounds + 1, s"$numTasks kernel tasks")
+    val reads = taskReads.asScala.toSeq.collect { case (`stageId`, n) => n }
+    assert(reads.size == numTasks && reads.forall(_ > 0), s"records read per kernel task: $reads")
   }
 
   /** `obs` restricted to resample `rs` with the pipeline's md5 sample of
