@@ -29,9 +29,9 @@ import graft.sources.Sources
  * composed once, in `explainWide`, over wide rows carrying `rs`:
  * [[explanatoryFeatures]] runs it on the full data alone (wide rows from
  * [[pivotWide]]), [[constructExplanations]] on the full data plus every
- * instability resample in one plan. Steps 2-3 of one window are
- * [[graft.functions.ExplainKernel.explainWindow]], the same function the
- * online operator (`StreamingOps.explainBuffered`) calls at window close.
+ * instability resample in one plan. The online operator
+ * (`StreamingOps.explainBuffered`) calls the same kernel,
+ * [[graft.functions.ExplainKernel.explainGroup]], over each closed window.
  */
 object ExstreamPipeline {
 

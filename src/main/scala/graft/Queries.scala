@@ -103,9 +103,7 @@ object Queries {
       lpad((col("doc_id") % 10000).cast("string"), 4, "0"), lit(" filed"))).otherwise(""))
 
   /** The PII detection/redaction projection over `(doc_id, atext)` —
-    * stateless and codegen-only, so the SAME definition runs in batch
-    * (q106) and as a streaming ingest stage
-    * ([[graft.streaming.StreamingOps.redactIngest]]). */
+    * stateless and codegen-only (q106). */
   private[graft] def piiReport(in: DataFrame): DataFrame = {
     val counts = TF.piiPatterns.map { case (name, rx, _) =>
       regexp_count(col("atext"), lit(rx)).cast("long").as(s"n_$name")
@@ -123,10 +121,8 @@ object Queries {
   /** The banned-phrase blocklist scan over `(doc_id, text)` — one
     * Aho-Corasick pass per row matching every pattern simultaneously,
     * the automaton built once on the driver and riding the kernel
-    * closure (the r11 constant-table rule). Stateless and narrow, so
-    * the SAME definition runs in batch (q175) and as a streaming ingest
-    * stage ([[graft.streaming.StreamingOps.blocklistIngest]]) — the
-    * redactIngest/piiReport seam applied to phrase filtering. */
+    * closure (the r11 constant-table rule). Stateless and narrow
+    * (q175). */
   private[graft] def blocklistHits(
       in: DataFrame, patterns: Seq[String] = blocklistPatterns): DataFrame = {
     val ac = graft.functions.AhoCorasick(patterns)

@@ -8,12 +8,11 @@ import graft.operators.CorrelationFilter
  * filter, entropy reward and leap cut (`exstream.pdf` §3–4; reference
  * `correlation_filtering.py`, `false_positive_filtering.py`,
  * `entropy_based_single_reward_feature.py`) — as pure code over primitive
- * arrays. The batch pipeline calls [[explainGroup]] once per resample
- * group of wide rows, in that group's own task: step 1 over the whole
- * group, then steps 2–3 per window. [[explainWindow]] is the one
- * per-window function for steps 2–3; the online operator
- * (`StreamingOps.explainBuffered`) calls it directly on a closed window's
- * buffer, after its own window-local correlation step.
+ * arrays. [[explainGroup]] runs step 1 over a group of wide rows, then
+ * steps 2–3 per window. The batch pipeline calls it once per resample
+ * group, in that group's own task; the online operator
+ * (`StreamingOps.explainBuffered`) calls it once per closed window, with
+ * the window's buffer pivoted into a one-window group.
  *
  * Rules of steps 2–3, for one window:
  *  - FP filter: a feature enters only with a non-empty pattern and at
@@ -38,7 +37,7 @@ object ExplainKernel {
     * @param nRef    reference rows, empty cells included
     * @param pattern the FP match pattern in match order (empty when the FP
     *                filter is off) */
-  final case class WindowFeature(
+  private final case class WindowFeature(
       feature: String,
       values: Array[Double],
       classes: Array[Int],
@@ -55,7 +54,7 @@ object ExplainKernel {
    * @param series   a feature's reference series for the FP filter
    * @return the explanation, in ranking order
    */
-  def explainWindow(
+  private def explainWindow(
       features: Seq[WindowFeature],
       series: String => Seq[Array[Double]],
       cfg: ExstreamConfig): Seq[String] = {
@@ -117,7 +116,8 @@ object ExplainKernel {
   }
 
   /**
-   * Steps 1–3 for every window of one resample group.
+   * Steps 1–3 for every window of one group: a resample group in batch,
+   * one closed window on the stream.
    *
    * Step 1, correlation selection (`cfg.cluster`, at least two candidates):
    * the group sums its own pairwise-deletion moments over the
@@ -140,14 +140,18 @@ object ExplainKernel {
    * @param featureOrder the correlation candidates: the leading slots of
    *                     `features`
    * @param traceHas     the feature columns each trace has
+   * @param refSeries    reference series that replace the group's own
+   *                     series of the features they cover (the online
+   *                     operator's registry; batch passes none)
    * @return per window of the group, its explanation
    */
-  def explainGroup(
+  private[graft] def explainGroup(
       rows: WideRows,
       features: IndexedSeq[String],
       featureOrder: Seq[String],
       traceHas: Map[String, Set[String]],
-      cfg: ExstreamConfig): Seq[(String, Seq[String])] = {
+      cfg: ExstreamConfig,
+      refSeries: Map[String, Seq[Array[Double]]] = Map.empty): Seq[(String, Seq[String])] = {
     val has = rows.traceId.iterator.take(rows.n).distinct.map { t =>
       val cols = traceHas.getOrElse(t, Set.empty[String])
       t -> features.map(cols).toArray
@@ -178,12 +182,12 @@ object ExplainKernel {
       else {
         val refByTrace = (0 until rows.n).filter(rows.cls(_) == 0)
           .groupBy(rows.traceId(_)).toSeq.sortBy(_._1)
-        sel.map { j =>
+        sel.filterNot(j => refSeries.contains(features(j))).map { j =>
           features(j) -> refByTrace.collect { case (t, idx) if has(t)(j) =>
             cellValues(idx.filterNot(rows.empty(j)(_)).toArray
               .sortWith(byKeyThenValue(j, rows.windowKey(_))), j)
           }
-        }.toMap
+        }.toMap ++ refSeries
       }
 
     (0 until rows.n).groupBy(rows.windowKey(_)).toSeq.map { case (wk, idx) =>

@@ -10,8 +10,9 @@ package graft.functions
  * `(n, Σx, Σy, Σx², Σy², Σxy)` over the rows where both features are
  * present. One per-row update feeds all k(k−1)/2 pairs, and the moment
  * array is the whole state, so partial arrays merge by elementwise sum.
- * The batch aggregate ([[graft.plans.PairMomentsAggExpr]]) and the
- * window-local streaming path both call [[accumulate]].
+ * [[ExplainKernel.explainGroup]] (batch resample groups and the online
+ * operator's closed window) and the `CorrelationFilter` operators call
+ * [[accumulate]].
  */
 object PairMoments {
 

@@ -8,41 +8,6 @@ package graft
  * (`/root/reference/utils/get_data.py:56-106`).
  */
 
-/** One labeled anomaly span (`labels.csv` row; see FIXTURES.md A2).
-  * Ref window is half-open `[ref_start, ref_end)`; ano window is closed
-  * `[ano_start, ano_end]` (`get_data.py:86-95` — asymmetry is deliberate). */
-case class LabelSpan(
-    label_row: Long,
-    trace_id: String,
-    ano_id: Long,
-    ref_start: Long,
-    ref_end: Long,
-    ano_start: Long,
-    ano_end: Long,
-    ano_type: String)
-
-/** One observation of one feature inside a labeled window (long format).
-  * `window_key = s"${ano_type}_${trace_id}_${label_row}"`
-  * (`get_data.py:99-100`); `type_data`: 0 = reference, 1 = anomaly. */
-case class Observation(
-    window_key: String,
-    trace_id: String,
-    ano_id: Long,
-    ano_type: String,
-    timestamp: Long,
-    type_data: Int,
-    feature: String,
-    value: Double)
-
-/** Final explanation row (`script_1.py:148-184`): `explanation` holds the
-  * integer column positions of the selected features. */
-case class Explanation(
-    trace_id: String,
-    ano_id: Long,
-    explanation: Seq[Int],
-    exp_size: Int,
-    exp_instability: Double)
-
 /**
  * Pipeline configuration mirroring `script_1.py:257-261` plus the
  * quirk-mode switches documented in SURVEY.md §4a.

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.functions.PairMoments
-import graft.plans.PairMomentsAgg
 
 /**
  * A1/M2/M3/M4 (SURVEY.md §2.5, §2.8): correlation-clustering feature dedup
@@ -19,14 +19,14 @@ import graft.plans.PairMomentsAgg
  * building and connected components ([[selectByCorr]]) run on the k x k
  * result.
  *
- * Three callers sum the moments: `ExstreamPipeline` inside each resample
- * group's kernel task (`ExplainKernel.explainGroup`, no aggregate and no
- * collect), the streaming at-close path over one window
- * ([[selectFeaturesLocal]]), and the public DataFrame operator
- * [[selectFeaturesBy]], one distributed aggregation pass
- * (`graft_pair_moments`, [[PairMomentsAgg]]) collected to the driver —
- * kept for perfbench's traced layer composition and PipelineSpec's
- * kernel-vs-operators differential, off the pipeline path.
+ * Three callers sum the moments: `ExplainKernel.explainGroup` inside
+ * each group's task (the batch pipeline's resample groups and the online
+ * operator's closed window; no aggregate and no collect), the public
+ * DataFrame operator [[selectFeaturesBy]], one `mapPartitions` pass whose
+ * per-partition arrays are added on the driver — kept for perfbench's
+ * traced layer composition and PipelineSpec's kernel-vs-operators
+ * differential, off the pipeline path — and [[selectFeaturesLocal]],
+ * perfbench `Reference`'s independent step-1 implementation.
  *
  * Deliberate divergences (SURVEY §4a quirks 4/5/7):
  *  - correlations are computed over feature columns only (the reference
@@ -42,8 +42,8 @@ object CorrelationFilter {
   /** The pure graph core: union-find clustering with an edge iff
     * |corr(i,j)| > threshold (NaN = undefined = no edge) over one
     * [[PairMoments]] array; each cluster's representative is its smallest
-    * original column index. Shared by the per-group pipeline kernel, the
-    * distributed aggregate and the streaming window-local path. */
+    * original column index. Shared by the per-group kernel,
+    * [[selectFeaturesBy]] and [[selectFeaturesLocal]]. */
   private[graft] def selectByCorr(
       featureOrder: Seq[String],
       correlationThreshold: Double,
@@ -59,12 +59,9 @@ object CorrelationFilter {
   }
 
   /**
-   * Window-local pure variant for the streaming at-close path: the same
-   * moment accumulation and union-find over ONE closed window's buffered
-   * observations (the only data an online operator has at close). Batch
-   * sums the moments over every window of a resample group in that
-   * group's kernel task; on a single-window input the two are identical,
-   * which is what the streaming/batch parity test pins.
+   * Driver-local pure variant: the same moment accumulation and
+   * union-find over long rows, pivoted here. perfbench's `Reference`
+   * uses it as a step-1 implementation independent of the kernel's pivot.
    *
    * @param rows (timestamp, type_data, feature, value) — one value per
    *             (timestamp, type_data, feature), the wide-pivot contract;
@@ -88,9 +85,11 @@ object CorrelationFilter {
 
   /**
    * One moment array PER group value (e.g. one per instability resample),
-   * all from a single aggregation pass — rather than one aggregation per
-   * resample. The group count is tiny (1 + resample rounds), so the
-   * collected result is a handful of rows regardless of data volume.
+   * all from a single pass: each partition sums its rows' moments per
+   * group ([[PairMoments.accumulate]]) and the driver adds the
+   * per-partition arrays. The group count is tiny (1 + resample rounds),
+   * so the collected result is a handful of small arrays per partition
+   * regardless of data volume.
    *
    * @param wide     one row per observation, one nullable column per
    *                 feature (null = absent)
@@ -103,16 +102,28 @@ object CorrelationFilter {
       featureOrder: Seq[String],
       correlationThreshold: Double,
       groupCol: String): Map[Int, Seq[String]] = {
-    if (featureOrder.size <= 1) {
-      return wide.select(groupCol).distinct().collect()
-        .map(r => r.getInt(0) -> featureOrder).toMap
-    }
-    wide.groupBy(groupCol)
-      .agg(PairMomentsAgg.pairMoments(wide.sparkSession, featureOrder))
+    import wide.sparkSession.implicits._
+    val k = featureOrder.size
+    wide.select(col(groupCol).cast("int") +: featureOrder.map(f =>
+        col("`" + f.replace("`", "``") + "`").cast("double")): _*)
+      .mapPartitions { it =>
+        val byGroup = scala.collection.mutable.Map[Int, Array[Double]]()
+        val x = new Array[Double](k)
+        val present = new Array[Boolean](k)
+        it.foreach { r =>
+          var j = 0
+          while (j < k) {
+            present(j) = !r.isNullAt(1 + j)
+            if (present(j)) x(j) = r.getDouble(1 + j)
+            j += 1
+          }
+          val m = byGroup.getOrElseUpdate(r.getInt(0), PairMoments.empty(k))
+          PairMoments.accumulate(m, x, present)
+        }
+        byGroup.iterator
+      }
       .collect()
-      .map { row =>
-        row.getInt(0) -> selectByCorr(featureOrder, correlationThreshold,
-          row.getSeq[Double](1).toArray)
-      }.toMap
+      .groupMapReduce(_._1)(_._2)((a, b) => a.indices.map(i => a(i) + b(i)).toArray)
+      .map { case (g, m) => g -> selectByCorr(featureOrder, correlationThreshold, m) }
   }
 }

