@@ -25,27 +25,41 @@ import graft.sources.Sources
  * per (window, feature); the only driver-side data are the final
  * explanation rows.
  *
- * Steps 1-3 (correlation dedup -> FP filter -> reward + leap cutoff) are
- * composed once, in `explainWide`, over wide rows carrying `rs`:
- * [[explanatoryFeatures]] runs it on the full data alone (wide rows from
- * [[pivotWide]]), [[constructExplanations]] on the full data plus every
- * instability resample in one plan. The online operator
- * (`StreamingOps.explainBuffered`) calls the same kernel,
- * [[graft.functions.ExplainKernel.explainGroup]], over each closed window.
+ * Steps 1-3 (correlation dedup -> FP filter -> reward + leap cutoff) run
+ * in one kernel, [[graft.functions.ExplainKernel]].
+ * [[constructExplanations]] runs it in `explainWide`, over the wide rows
+ * of the full data plus every instability resample in one plan.
+ * [[explanatoryFeatures]] runs it on the full data alone, over long rows,
+ * through the kernel's long-row entry
+ * ([[graft.functions.ExplainKernel.explainLong]]); the online operator
+ * (`StreamingOps.explainBuffered`) calls the same entry over each closed
+ * window.
  */
 object ExstreamPipeline {
 
   /**
    * The core explanation query (§3.2): given labeled observations, return
-   * per window the ranked-and-filtered explanatory feature list — the
-   * single-instance run of [[explainWide]] over the observations' wide
-   * pivot ([[pivotWide]]).
+   * per window the ranked-and-filtered explanatory feature list. The long
+   * rows are shuffled to one partition, and its one task runs the kernel's
+   * long-row entry ([[graft.functions.ExplainKernel.explainLong]]) over
+   * them. Building the plan runs no job.
+   *
+   * Every row counts, as in the reference's concatenated frames: a
+   * duplicated (window, trace, timestamp, class) tick gives one wide row
+   * per duplicate. Long rows do not say which cells shared a CSV row, so
+   * the cells of a duplicated tick pair up by value order: per feature,
+   * the tick's k-th row takes its k-th smallest value, empty cells last.
+   * On a duplicated CSV row whose copies differ in one feature only, that
+   * is the CSV's own pairing.
    *
    * Re-keying is the whole group-level variant (SURVEY §3.3): the notebook
    * computes rewards per ANOMALY TYPE (`testing.ipynb` cells 21-26), which
-   * is this query over `obs.withColumn("window_key", col("ano_type"))`.
+   * is this query over `obs.withColumn("window_key", col("ano_type"))`; a
+   * tick inside two overlapping windows of one trace then counts twice.
    *
-   * @param obs          long observation table (IntervalLabeler output)
+   * @param obs          long observation table (IntervalLabeler output):
+   *                     `(window_key, trace_id, timestamp, type_data,
+   *                     feature, value)`, a null value an empty cell
    * @param featureOrder original feature column order (ranking tie-break)
    * @return `(window_key, features: array<string>)`
    */
@@ -53,13 +67,17 @@ object ExstreamPipeline {
       obs: DataFrame,
       featureOrder: Seq[String],
       cfg: ExstreamConfig): DataFrame = {
-    val traceHas = obs.groupBy(col("trace_id").cast("string"))
-      .agg(collect_set("feature")).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap
-    val features = allFeatures(featureOrder, traceHas.values.flatten)
-    explainWide(pivotWide(obs, features).withColumn("rs", lit(-1)),
-      featureOrder, features, traceHas, groups = 1, cfg)
-      .select("window_key", "features")
+    import obs.sparkSession.implicits._
+    obs.select(col("window_key").cast("string"), col("trace_id").cast("string"),
+        col("timestamp").cast("long"), col("type_data").cast("int"),
+        col("feature").cast("string"), col("value").cast("double"))
+      .repartition(1)
+      .mapPartitions { it =>
+        ExplainKernel.explainLong(it.map(r => ExplainKernel.LongRow(r.getString(0), r.getString(1),
+            r.getLong(2), r.getInt(3), r.getString(4), r.getAs[java.lang.Double](5))),
+          featureOrder, cfg).iterator
+      }
+      .toDF("window_key", "features")
   }
 
   /** The resample id folded into a window key: `"<rs>#<key>"`, so every
@@ -74,11 +92,6 @@ object ExstreamPipeline {
     df.withColumn("rs", parts.getItem(0).cast("int"))
       .withColumn("window_key", parts.getItem(1))
   }
-
-  /** The feature order followed by every other column a trace has, by
-    * name: the value slots of [[explainWide]]'s wide rows. */
-  private def allFeatures(featureOrder: Seq[String], columns: Iterable[String]): IndexedSeq[String] =
-    (featureOrder ++ columns.toSeq.distinct.filterNot(featureOrder.toSet).sorted).toIndexedSeq
 
   /**
    * Steps 1-3 of the explanation query — correlation dedup, FP filter,
@@ -156,15 +169,6 @@ object ExstreamPipeline {
     val n = math.max(0L, math.min(65536L, math.round(fraction * 65536)))
     if (n >= 65536L) "g" else f"$n%04x"
   }
-
-  /** Pivot the long observation table back to wide (one row per
-    * (window, trace, timestamp, type_data)) — the input of
-    * `FeatureImportance.randomForestImportances` and of
-    * [[explanatoryFeatures]]. */
-  def pivotWide(obs: DataFrame, featureOrder: Seq[String]): DataFrame =
-    obs.groupBy("window_key", "trace_id", "timestamp", "type_data")
-      .pivot("feature", featureOrder)
-      .agg(first("value"))
 
   /**
    * End-to-end batch pipeline over a trace folder (§3.1), including
@@ -248,7 +252,7 @@ object ExstreamPipeline {
       .where(col("rs") === -1 || sampled)
     val traceHas = traces.map(t => t.id -> t.metrics.toSet).toMap
     val expl = explainWide(wide, featureOrder,
-      allFeatures(featureOrder, traces.flatMap(_.metrics)), traceHas, rsValues.size, cfg)
+      ExplainKernel.allFeatures(featureOrder, traces.flatMap(_.metrics)), traceHas, rsValues.size, cfg)
     (expl, labels, featureOrder)
   }
 }

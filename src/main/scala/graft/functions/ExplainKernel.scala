@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.collection.mutable
+
 import graft.ExstreamConfig
 import graft.operators.CorrelationFilter
 
@@ -9,10 +11,12 @@ import graft.operators.CorrelationFilter
  * `correlation_filtering.py`, `false_positive_filtering.py`,
  * `entropy_based_single_reward_feature.py`) — as pure code over primitive
  * arrays. [[explainGroup]] runs step 1 over a group of wide rows, then
- * steps 2–3 per window. The batch pipeline calls it once per resample
- * group, in that group's own task; the online operator
- * (`StreamingOps.explainBuffered`) calls it once per closed window, with
- * the window's buffer pivoted into a one-window group.
+ * steps 2–3 per window. `constructExplanations` calls it once per
+ * resample group, in that group's own task. [[explainLong]] is the one
+ * long-row entry: it pivots long rows into one group and calls
+ * [[explainGroup]]. `explanatoryFeatures` calls it once over all of its
+ * rows, and the online operator (`StreamingOps.explainBuffered`) once per
+ * closed window.
  *
  * Rules of steps 2–3, for one window:
  *  - FP filter: a feature enters only with a non-empty pattern and at
@@ -115,9 +119,63 @@ object ExplainKernel {
     }
   }
 
+  /** A long row: one cell of one tick. A null `value` is an empty cell;
+    * NaN is a present value. */
+  private[graft] final case class LongRow(windowKey: String, traceId: String, timestamp: Long, cls: Int,
+                           feature: String, value: java.lang.Double)
+
+  /** The wide value slots: `featureOrder`, then every other column by name. */
+  private[graft] def allFeatures(featureOrder: Seq[String], columns: Iterable[String]): IndexedSeq[String] =
+    (featureOrder ++ columns.toSeq.distinct.filterNot(featureOrder.toSet).sorted).toIndexedSeq
+
   /**
-   * Steps 1–3 for every window of one group: a resample group in batch,
-   * one closed window on the stream.
+   * Steps 1–3 over long rows: the rows pivoted into one group of
+   * [[WideRows]] and one [[explainGroup]] call.
+   *
+   * The pivot: the rows of one (window_key, trace_id, timestamp, class)
+   * are one tick and make one wide row; a tick that repeats a feature
+   * starts a further row. A repeated feature's values fill the tick's rows
+   * in total order, its empty cells last, so the cells of a duplicated tick
+   * pair up by value order. A feature missing at a tick is an empty cell.
+   * Each trace's columns are the features its rows carry, and the value
+   * slots are [[allFeatures]]. Ticks are pivoted in key order, so the
+   * order of `rows` cannot change the answer.
+   *
+   * @return per window, its explanation
+   */
+  private[graft] def explainLong(
+      rows: Iterator[LongRow],
+      featureOrder: Seq[String],
+      cfg: ExstreamConfig,
+      refSeries: Map[String, Seq[Array[Double]]] = Map.empty): Seq[(String, Seq[String])] = {
+    val ticks = mutable.HashMap.empty[(String, String, Long, Int),
+      mutable.HashMap[String, mutable.ArrayBuffer[java.lang.Double]]]
+    rows.foreach { r =>
+      ticks.getOrElseUpdate((r.windowKey, r.traceId, r.timestamp, r.cls), mutable.HashMap.empty)
+        .getOrElseUpdate(r.feature, mutable.ArrayBuffer.empty) += r.value
+    }
+    val traceHas = ticks.toSeq.groupMapReduce(_._1._2)(_._2.keySet.toSet)(_ ++ _)
+    val features = allFeatures(featureOrder, traceHas.values.flatten)
+    val slot = features.zipWithIndex.toMap
+    val wide = new WideRows(features.size)
+    val v = new Array[Double](features.size)
+    val empty = new Array[Boolean](features.size)
+    ticks.toSeq.sortBy(_._1).foreach { case ((wk, trace, ts, cls), cells) =>
+      val present = cells.toSeq.map { case (f, vs) =>
+        slot(f) -> vs.iterator.filter(_ != null).map(_.doubleValue).toArray.sorted(Ordering.Double.TotalOrdering)
+      }
+      (0 until cells.values.map(_.size).max).foreach { d =>
+        java.util.Arrays.fill(empty, true)
+        present.foreach { case (j, vs) => if (d < vs.length) { v(j) = vs(d); empty(j) = false } }
+        wide.add(wk, trace, ts, cls, v, empty)
+      }
+    }
+    explainGroup(wide, features, featureOrder, traceHas, cfg, refSeries)
+  }
+
+  /**
+   * Steps 1–3 for every window of one group: a resample group of
+   * `constructExplanations`, or the rows [[explainLong]] pivots.
    *
    * Step 1, correlation selection (`cfg.cluster`, at least two candidates):
    * the group sums its own pairwise-deletion moments over the

@@ -19,7 +19,10 @@ object FeatureImportance {
 
   /**
    * @param wide one row per observation with `featureCols` and a 0/1
-   *             `labelCol` (the type_data class)
+   *             `labelCol` (the type_data class): the labeled wide rows
+   *             `constructExplanations` reads,
+   *             `IntervalLabeler.labelObservations(Sources.unionWide(traces), labels)`;
+   *             a row with an empty cell is skipped
    * @return (feature, importance) sorted descending — the notebook's
    *         ranking view of `feature_importances_`
    */

@@ -18,19 +18,15 @@ import org.apache.spark.sql.functions._
  * neighbors, then per round score the 2-hop closure of the UNDIRECTED
  * current graph and cut back to the K best per node. This lite variant
  * keeps NN-descent's candidate generation (undirected 2-hop = Dong's
- * forward+reverse neighbor join) and, since r16, the SCORING half of
- * Dong's incremental bookkeeping AT SCALE: past the vector-broadcast
- * cap a cumulative seen-pairs table makes the per-round anti-join skip
- * every pair any earlier round scored (accepted or rejected), so the
- * distance kernel and its two shuffled vector-attach joins see each
- * directed pair at most once across the build; while the vectors
- * broadcast (fixture scale) the bookkeeping measured as a net loss and
- * the round re-scores non-graph candidates (see the gate comment in
- * [[nswBuildRounds]]). Candidate GENERATION still walks the full
- * closure (simpler, oracle-able); the trade is documented rather than
- * hidden (SURVEY §2.11). Both forms are result-identical: per-node
- * top-K is monotone, so a once-rejected pair can never re-enter
- * (NswGraphSpec pins seen-pairs == re-scoring exactly).
+ * forward+reverse neighbor join) but not its incremental bookkeeping:
+ * each round scores every candidate not in the current graph, so a pair
+ * an earlier round rejected is scored again (and loses again: per-node
+ * top-K is monotone). Candidate generation walks the full closure
+ * (simpler, oracle-able; SURVEY §2.11). A cumulative seen-pairs table
+ * measured as a net loss while the vectors broadcast (q171 2.94 → 3.67 s
+ * at sf0.1, r16), and no workload exceeds the broadcast cap, so the build
+ * has none. NswGraphSpec pins the build against the re-scoring
+ * recurrence run driver-side.
  *
  * == Determinism / oracle ==
  * Everything is integer: vectors ride the floor(v*1024) quantization
@@ -115,8 +111,7 @@ object NswGraph {
    * curve).
    */
   def nswBuildRounds(corpus: DataFrame, idCol: String, vecCol: String,
-                     k: Int, rounds: Int, seeds: Int,
-                     seenPairs: Option[Boolean] = None): Seq[DataFrame] = {
+                     k: Int, rounds: Int, seeds: Int): Seq[DataFrame] = {
     require(k > 0 && rounds >= 0 && seeds > 0)
     val qv = corpus
       .select(col(idCol).as("vid"), Similarity.quantized(col(vecCol)).as("q"))
@@ -130,20 +125,6 @@ object NswGraph {
     val vectorsBroadcast = broadcastVectorCapFor(n, dim)
     val hint: DataFrame => DataFrame =
       if (vectorsBroadcast) broadcast(_) else identity
-    // seen-pairs gate (r16, measured): the bookkeeping trades an extra
-    // ids-only anti-join volume (~16 B/row) for skipped scoring
-    // (kernel + BOTH vector-attach joins per pair). While the vector
-    // table BROADCASTS, scoring a pair is one in-memory hash probe plus
-    // the kernel (~µs) and the r16 sf0.1 probe measured the trade
-    // NEGATIVE (813k → 709k scored pairs across 3 rounds, but q171
-    // 2.94 → 3.67 s in a same-layout A/B); once the vectors no longer
-    // fit the broadcast cap, every scored pair costs two shuffled
-    // fetches of a dim-long array (≥ 512 B at dim 64) against 16 B of
-    // anti-join — there the bookkeeping is the only linear-cost shape.
-    // So it switches on exactly where candidate volume dominates:
-    // !broadcastVectorCapFor (override via `seenPairs` for specs).
-    val useSeen = seenPairs.getOrElse(!vectorsBroadcast)
-
     // r16 (§2.5 parallelism): on the broadcast path the candidate-pair
     // input reaches the kernel through AQE-coalesced exchanges — the
     // pairs are ids-only (~16 B/row), so AQE collapses them to 1-2
@@ -175,25 +156,7 @@ object NswGraph {
         "pmod(a + 1 + pmod(cast(conv(substr(md5(cast(concat(a, '_', j) " +
           s"as binary)), 1, 15), 16, 10) as bigint), ${n - 1}L), ${n}L)").as("b"))
       .distinct()
-      .ckptLazy // consumers: round-0 scoring + the seen-pairs seed
     var g = topK(scored(init)).ckptEager
-    // NN-descent's cumulative seen-pairs bookkeeping (r15 verdict #1 —
-    // the analyzed third NSW optimization, implemented r16): every
-    // directed pair EVER scored, so later rounds' anti-join skips not
-    // just the current graph's 2Kn edges but also every pair a previous
-    // round scored and REJECTED. Result-identical: per-node top-K is
-    // monotone (the k-th best d2 never increases round over round), so
-    // a pair that ranked > K among round-r candidates ranks > K in
-    // every later round — re-scoring it can never change topK.
-    // Maintenance is FREE of copies: the table is kept as a LIST of
-    // already-materialized checkpoint parts (init + each round's
-    // newPairs, every one materialized by its own scoring job) and the
-    // anti-join reads their plan-level union — checkpointing the union
-    // itself would re-copy the whole cumulative table every round
-    // (O(rounds² · pairs) block writes, measured as a net loss). No
-    // distinct is needed anywhere: cand is distinct and the anti-join
-    // makes each part disjoint from all earlier ones by construction.
-    var seenParts = Vector[DataFrame](init)
     val perRound = Vector.newBuilder[DataFrame]
     perRound += g
     for (_ <- 1 to rounds) {
@@ -216,21 +179,9 @@ object NswGraph {
         .select(col("a"), col("b")).where(col("b") =!= col("a"))
         .unionByName(und.select("a", "b"))
         .distinct()
-      // score only candidates not yet scored: under the gate, "scored"
-      // means the current graph's pairs (they carry their d2 from last
-      // round — rejected pairs re-score and re-lose, cheap while the
-      // vectors broadcast); past it, the cumulative seen table (the
-      // kernel + the two vector-attach joins then see each directed
-      // pair at most ONCE across the whole build)
-      val fresh =
-        if (useSeen) {
-          val newPairs = cand
-            .join(seenParts.reduce(_ unionByName _), Seq("a", "b"), "left_anti")
-            .ckptLazy // consumers: scoring + next rounds' anti-joins
-          seenParts :+= newPairs
-          scored(newPairs)
-        } else
-          scored(cand.join(g.select("a", "b"), Seq("a", "b"), "left_anti"))
+      // score only candidates not in the current graph: graph pairs carry
+      // their d2 from last round
+      val fresh = scored(cand.join(g.select("a", "b"), Seq("a", "b"), "left_anti"))
       g = topK(fresh.unionByName(g.select("a", "b", "d2")))
         .ckptEager
       perRound += g

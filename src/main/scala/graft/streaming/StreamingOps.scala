@@ -13,11 +13,14 @@ import graft.functions.ExplainKernel
  * closes (`exstream.pdf` §1). [[explainOnCloseCfg]] does that over a
  * stream of labeled observations ([[StreamObs]]): it buffers each
  * window's rows in keyed state and, at the close marker (or an
- * event-/processing-time timeout), emits the window's explanation from
- * [[explainBuffered]] — one call of the batch kernel
- * (`ExplainKernel.explainGroup`) over the closed window, under any of
- * the four (cluster, fp) configs. [[refSeriesRegistry]] supplies the
- * trace-wide FP reference series a single window's buffer lacks.
+ * event-time timeout), emits the window's explanation from
+ * [[explainBuffered]] — one call of the kernel's long-row entry
+ * (`ExplainKernel.explainLong`, which `explanatoryFeatures` also runs)
+ * over the closed window, under any of the four (cluster, fp) configs.
+ * Rows of a feature outside `featureOrder` are still ignored on the
+ * stream, where `explanatoryFeatures` keeps them as further columns.
+ * [[refSeriesRegistry]] supplies the trace-wide FP reference series a
+ * single window's buffer lacks.
  * StreamingSpec pins stream = batch per config and StreamingStateSpec
  * the state bound (one row per open window).
  */
@@ -93,18 +96,6 @@ object StreamingOps {
     else obs
   }
 
-  /** Arm the state's timeout for the configured mode (call after every
-    * `state.update`). The event-time timestamp is clamped one ms above the
-    * current watermark — Spark rejects a timeout at or before it. */
-  private def armTimeout(
-      state: GroupState[WindowBuffer], buf: WindowBuffer,
-      procTimeout: Boolean, eventTimeout: Boolean,
-      timeoutDuration: String, timeoutSpanMs: Long): Unit = {
-    if (procTimeout) state.setTimeoutDuration(timeoutDuration)
-    if (eventTimeout) state.setTimeoutTimestamp(
-      math.max(buf.maxTsMs + timeoutSpanMs, state.getCurrentWatermarkMs() + 1))
-  }
-
   /**
    * The paper's ONLINE behavior (`exstream.pdf` §1: explanations
    * triggered as annotated anomaly windows close): buffer observations
@@ -123,6 +114,10 @@ object StreamingOps {
    * window's span (label spans are 1-2k ticks in the reference data, and
    * `maxBuffered` caps adversarial input), and windows are independent
    * groups — state shards across executors like any keyed stream.
+   *
+   * @param timeout `NoTimeout` (close markers only) or `EventTimeTimeout`;
+   *                there is no wall-clock mode, so replaying a recorded
+   *                stream fires the same closes
    */
   def explainOnCloseCfg(
       obs: Dataset[StreamObs],
@@ -130,13 +125,13 @@ object StreamingOps {
       cfg: graft.ExstreamConfig,
       maxBuffered: Int = 100000,
       timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout(),
-      timeoutDuration: String = "1 hour",
       timeoutSpanMs: Long = 3600000L,
       watermarkDelay: String = "10 seconds",
       refSeries: Map[String, Array[Double]] = Map.empty): Dataset[StreamExplanation] = {
     import obs.sparkSession.implicits._
-    val procTimeout = timeout == GroupStateTimeout.ProcessingTimeTimeout()
     val eventTimeout = timeout == GroupStateTimeout.EventTimeTimeout()
+    require(eventTimeout || timeout == GroupStateTimeout.NoTimeout(),
+      s"timeout must be NoTimeout or EventTimeTimeout, got $timeout")
     withEventTimeWatermark(obs, eventTimeout, watermarkDelay)
       .groupByKey(_.window_key)
       .flatMapGroupsWithState[WindowBuffer, StreamExplanation](
@@ -155,7 +150,10 @@ object StreamingOps {
               key, buf.n, explainBuffered(buf.rows, featureOrder, cfg, refSeries)))
           } else {
             state.update(buf)
-            armTimeout(state, buf, procTimeout, eventTimeout, timeoutDuration, timeoutSpanMs)
+            // clamped one ms above the watermark: Spark rejects a timeout
+            // at or before it
+            if (eventTimeout) state.setTimeoutTimestamp(
+              math.max(buf.maxTsMs + timeoutSpanMs, state.getCurrentWatermarkMs() + 1))
             Iterator.empty
           }
       }
@@ -163,24 +161,20 @@ object StreamingOps {
 
   /**
    * Pure per-window explanation over a closed buffer, under all four
-   * (cluster, fp) configs: the buffer pivoted into one group of wide rows
-   * and one `ExplainKernel.explainGroup` call — the kernel every batch
-   * resample group runs, so stream and batch share every rule
-   * (correlation moments, FP match count and argmin fallback, reward, leap
-   * cut). A window with one class only has the empty explanation.
+   * (cluster, fp) configs: the buffer's rows of the `featureOrder`
+   * features, as one window of one trace, through the kernel's long-row
+   * entry (`ExplainKernel.explainLong`) — the pivot and kernel
+   * `explanatoryFeatures` runs, so stream and batch share every rule
+   * (duplicated ticks, empty cells, correlation moments, FP match count
+   * and argmin fallback, reward, leap cut). A window with one class only
+   * has the empty explanation.
    *
-   * The pivot: one wide row per (timestamp, class) over the `featureOrder`
-   * columns; a (timestamp, class) that repeats a feature starts a further
-   * row, as a duplicated trace timestamp does in batch. A feature missing
-   * at a tick is an empty cell: absent from moments, pattern and series,
-   * but counted toward the class sizes. A NaN value is a present value.
-   * Rows of a feature outside `featureOrder` are ignored, and a feature
-   * with no rows in the buffer is no candidate.
-   *
-   * Input order is irrelevant: ticks are pivoted in (timestamp, class)
-   * order and a repeated feature's values in value order, and the kernel
-   * orders patterns and series itself, so arrival-order nondeterminism on
-   * the stream cannot change the answer.
+   * A feature missing at a tick is an empty cell: absent from moments,
+   * pattern and series, but counted toward the class sizes. A NaN value is
+   * a present value. Rows of a feature outside `featureOrder` are ignored,
+   * and a feature with no rows in the buffer is no candidate. Input order
+   * is irrelevant, so arrival-order nondeterminism on the stream cannot
+   * change the answer.
    *
    * Scope note (the online boundary): the kernel sees THIS window's rows —
    * the only data an online operator has at close. Batch sums step 1's
@@ -197,26 +191,12 @@ object StreamingOps {
       featureOrder: Seq[String],
       cfg: graft.ExstreamConfig,
       refSeries: Map[String, Array[Double]] = Map.empty): Seq[String] = {
-    val slot = featureOrder.zipWithIndex.toMap
-    val k = featureOrder.size
-    val rows = new ExplainKernel.WideRows(k)
-    val v = new Array[Double](k)
-    val empty = new Array[Boolean](k)
-    val candidates = buf.filter(o => slot.contains(o.feature))
+    val candidate = featureOrder.toSet
     // one window and one trace: both keys are constant
-    candidates.groupBy(o => (o.timestamp, o.type_data))
-      .toSeq.sortBy(_._1).foreach { case ((ts, cls), tick) =>
-        val cells = tick.groupBy(o => slot(o.feature))
-          .map { case (j, os) => j -> os.map(_.value).sorted(Ordering.Double.TotalOrdering) }
-        (0 until cells.values.map(_.size).max).foreach { d =>
-          java.util.Arrays.fill(empty, true)
-          cells.foreach { case (j, vs) => if (d < vs.size) { v(j) = vs(d); empty(j) = false } }
-          rows.add("", "", ts, cls, v, empty)
-        }
-      }
-    val has = Map("" -> candidates.map(_.feature).toSet)
-    ExplainKernel.explainGroup(rows, featureOrder.toIndexedSeq, featureOrder, has, cfg,
-        refSeries.map { case (f, s) => f -> Seq(s) })
+    ExplainKernel.explainLong(
+        buf.iterator.filter(o => candidate(o.feature))
+          .map(o => ExplainKernel.LongRow("", "", o.timestamp, o.type_data, o.feature, o.value)),
+        featureOrder, cfg, refSeries.map { case (f, s) => f -> Seq(s) })
       .headOption.fold(Seq.empty[String])(_._2)
   }
 }

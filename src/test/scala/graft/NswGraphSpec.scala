@@ -106,21 +106,16 @@ class NswGraphSpec extends AnyFunSuite {
   }
 
   test("seen-pairs bookkeeping == full re-scoring recurrence (r16)") {
-    // past the vector-broadcast gate the build skips every pair ever
-    // scored instead of re-scoring non-graph candidates each round.
-    // Equality holds because per-node top-K is monotone — this spec
-    // pins it three ways: seen-pairs FORCED ON vs forced OFF vs the
-    // re-scoring recurrence run driver-side on the collected quantized
-    // vectors, all three the identical full row set.
+    // the name is a stable id: the build no longer keeps a seen-pairs
+    // table. It re-scores every non-graph candidate each round; this spec
+    // pins it against the re-scoring recurrence run driver-side on the
+    // collected quantized vectors, the identical full row set.
     val df = clustered()
     val k = 4; val rounds = 3; val seeds = 4
-    def build(seen: Option[Boolean]): Set[(Long, Int, Long, Long)] =
-      NswGraph.nswBuildRounds(df, "vec_id", "embedding",
-          k = k, rounds = rounds, seeds = seeds, seenPairs = seen).last
-        .select(col("a"), col("rk").cast("int"), col("b"), col("d2"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val g = build(Some(true))
-    assert(g == build(Some(false)), "seen-pairs ON diverged from seen-pairs OFF")
+    val g = NswGraph.nswBuildRounds(df, "vec_id", "embedding",
+        k = k, rounds = rounds, seeds = seeds).last
+      .select(col("a"), col("rk").cast("int"), col("b"), col("d2"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
 
     val qv = df.select(col("vec_id"),
         graft.operators.Similarity.quantized(col("embedding")).as("q"))
@@ -152,7 +147,7 @@ class NswGraphSpec extends AnyFunSuite {
         (a, m) <- und; (_, b) <- byA.getOrElse(m, Set.empty); if b != a
       } yield (a, b)
       val cand = twoHop ++ und
-      // OLD recurrence: re-score every candidate not in the current graph
+      // re-score every candidate not in the current graph
       cur = topK(cand ++ cur.keySet, cur)
     }
     val expected = cur.toSeq.groupBy(_._1._1).flatMap { case (_, rs) =>
@@ -160,7 +155,7 @@ class NswGraphSpec extends AnyFunSuite {
         case (((a, b), dd), i) => (a, i + 1, b, dd)
       }
     }.toSet
-    assert(g == expected, "seen-pairs build diverged from the re-scoring recurrence")
+    assert(g == expected, "build diverged from the re-scoring recurrence")
   }
 
   test("clustered data: refinement drives recall where local structure exists") {

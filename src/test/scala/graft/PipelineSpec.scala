@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat_ws, lit, md5}
+import org.apache.spark.sql.functions.{col, concat_ws, first, lit, md5}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 import graft.sources.Sources
@@ -131,8 +131,10 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("RandomForest importance baseline ranks the separating feature first (M5)") {
-    val (obs, featureOrder, _) = loaded
-    val wide = ExstreamPipeline.pivotWide(obs, featureOrder)
+    // the wide labeled rows constructExplanations reads
+    val (traces, featureOrder) = Sources.readTracesWide(spark, fixtureDir, "labels")
+    val wide = IntervalLabeler.labelObservations(Sources.unionWide(traces),
+      Sources.readLabels(spark, s"$fixtureDir/labels.csv"))
     val imps = FeatureImportance.randomForestImportances(wide, featureOrder)
       .collect().map(r => r.getString(0) -> r.getDouble(1))
     assert(imps.map(_._1).take(2).toSet.intersect(Set("f_sep", "f_corr")).nonEmpty)
@@ -289,9 +291,6 @@ class PipelineSpec extends AnyFunSuite {
     val dir = writeFolder(driftFiles)
     val (traceLong, featureOrder) = Sources.readAllTraces(spark, dir, "labels")
     assert(featureOrder == Seq("f_a", "f_b", "f_c", "f_d"))
-    val labels = Sources.readLabels(spark, s"$dir/labels.csv")
-      .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
-    val obs = IntervalLabeler.labelObservations(traceLong, labels).cache()
     // the long rows are each file's own melt: no f_c rows for 2_1, no f_e
     // rows for 1_1, and the empty cell is one null value
     assert(traceLong.where(col("trace_id") === "2_1" && col("feature") === "f_c").count() == 0)
@@ -299,19 +298,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(traceLong.where(col("value").isNull).collect().map(r =>
       (r.getAs[String]("trace_id"), r.getAs[Long]("timestamp"), r.getAs[String]("feature"))).toSeq ==
       Seq(("1_1", 210L, "f_c")))
-    val featIdx = featureOrder.zipWithIndex.toMap
-    val keyOf = Map(("1_1", 0L) -> "bursty input_1_1_0", ("2_1", 0L) -> "stalled input_2_1_1")
-    for (cluster <- Seq(false, true); fp <- Seq(false, true)) {
-      val cfg = ExstreamConfig(cluster = cluster, falsePositiveFiltering = fp,
-        maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
-      val want = ExstreamPipeline.explanatoryFeatures(obs, featureOrder, cfg).collect()
-        .map(r => r.getString(0) -> r.getSeq[String](1).map(featIdx.getOrElse(_, -1))).toMap
-      val got = ExstreamPipeline.constructExplanations(spark, dir, "labels", cfg).collect()
-        .map(r => keyOf((r.getString(0), r.getLong(1))) -> r.getSeq[Int](2)).toMap
-      assert(got == want, s"cluster=$cluster fp=$fp")
-      assert(got.values.forall(_.nonEmpty), s"cluster=$cluster fp=$fp: $got")
+    // a duplicated tick: 1_1 repeats t=230 inside its anomaly span, the two
+    // rows differing in f_c only (-1.3 and 1.3, both inside f_c's reference
+    // range), and f_c has no other anomaly cell. Both rows keep f_c out of
+    // every config's explanation; either row alone lets it in.
+    val dup = driftFiles.map {
+      case ("1_1", cols, rows) =>
+        val j = 1 + cols.indexOf("f_c")
+        ("1_1", cols, rows.flatMap { r =>
+          val ts = r.head.toInt
+          if (ts == 230) Seq(r.updated(j, "-1.3"), r.updated(j, "1.3"))
+          else Seq(if (ts >= 200 && ts <= 260) r.updated(j, "") else r)
+        })
+      case other => other
     }
-    obs.unpersist()
+    val keyOf = Map(("1_1", 0L) -> "bursty input_1_1_0", ("2_1", 0L) -> "stalled input_2_1_1")
+    Seq(dir, writeFolder(dup)).foreach { folder =>
+      val (traceLong, featureOrder) = Sources.readAllTraces(spark, folder, "labels")
+      val labels = Sources.readLabels(spark, s"$folder/labels.csv")
+        .withColumn("ano_type", Sources.anomalyTypeCol(col("trace_id")))
+      val obs = IntervalLabeler.labelObservations(traceLong, labels).cache()
+      val featIdx = featureOrder.zipWithIndex.toMap
+      for (cluster <- Seq(false, true); fp <- Seq(false, true)) {
+        val cfg = ExstreamConfig(cluster = cluster, falsePositiveFiltering = fp,
+          maxDistance = 5.0, applyWorstCase = true, instabilityRounds = 2)
+        val want = ExstreamPipeline.explanatoryFeatures(obs, featureOrder, cfg).collect()
+          .map(r => r.getString(0) -> r.getSeq[String](1).map(featIdx.getOrElse(_, -1))).toMap
+        val got = ExstreamPipeline.constructExplanations(spark, folder, "labels", cfg).collect()
+          .map(r => keyOf((r.getString(0), r.getLong(1))) -> r.getSeq[Int](2)).toMap
+        assert(got == want, s"$folder cluster=$cluster fp=$fp")
+        assert(got.values.forall(_.nonEmpty), s"$folder cluster=$cluster fp=$fp: $got")
+      }
+      obs.unpersist()
+    }
 
     val bad = writeFolder(driftFiles :+ (("3_1", Seq("f_a"), Seq(Seq("0", "1.5"), Seq("1", "abc")))))
     val err = intercept[Exception] {
@@ -342,6 +361,29 @@ class PipelineSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     val plan = try {
       val df = ExstreamPipeline.constructExplanations(spark, fixtureDir, "labels", cfg)
+      org.apache.spark.ListenerBusDrain(sc)
+      df
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs during plan build")
+    assert(plan.count() == 4)
+  }
+
+  test("explanatoryFeatures plan build runs no job") {
+    // the long rows' feature sets are read inside the kernel task, not
+    // collected to the driver while the plan is built
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (obs, featureOrder, _) = loaded
+    val cfg = ExstreamConfig(cluster = true, falsePositiveFiltering = true,
+      maxDistance = 5.0, applyWorstCase = true)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val plan = try {
+      val df = ExstreamPipeline.explanatoryFeatures(obs, featureOrder, cfg)
       org.apache.spark.ListenerBusDrain(sc)
       df
     } finally sc.removeSparkListener(listener)
@@ -410,8 +452,10 @@ class PipelineSpec extends AnyFunSuite {
     val withRs = rsValues.map(rs => sliceFor(obs, rs, base).withColumn("rs", lit(rs)))
       .reduce(_ unionByName _)
     val selByRs = CorrelationFilter.selectFeaturesBy(
-      ExstreamPipeline.unfoldRs(ExstreamPipeline.pivotWide(
-        withRs.withColumn("window_key", ExstreamPipeline.rsKey(col("window_key"))), featureOrder)),
+      ExstreamPipeline.unfoldRs(
+        withRs.withColumn("window_key", ExstreamPipeline.rsKey(col("window_key")))
+          .groupBy("window_key", "trace_id", "timestamp", "type_data")
+          .pivot("feature", featureOrder).agg(first("value"))),
       featureOrder, base.correlationThreshold, "rs")
     val byCfg = cfgs.zipWithIndex.map { case (cfg, c) =>
       val rows = withRs.withColumn("c", lit(c))

@@ -171,6 +171,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.head.getAs[Int]("n_obs") == 10)
     // the force-closed window gets the SAME answer the close marker gives
     assert(out.head.getSeq[String](2) == Seq("f3"))
+    // there is no wall-clock mode: a processing-time timeout is refused
+    val err = intercept[IllegalArgumentException] {
+      StreamingOps.explainOnCloseCfg(input.toDS(), Seq("f1"), ExstreamConfig(),
+        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout())
+    }
+    assert(err.getMessage.contains("NoTimeout") && err.getMessage.contains("EventTimeTimeout"))
   }
 
   test("stream-static enrichment join stays broadcast (no stateful shuffle)") {
